@@ -2,6 +2,8 @@ package graft.engine
 
 import org.apache.spark.sql.{Dataset, Encoders}
 
+import graft.functions.NativeExprs
+
 /** Optional external-binary compatibility mode.
   *
   * The reference executes user-supplied statically-linked binaries with
@@ -48,13 +50,12 @@ object PipeMode {
   def reduceChain(kvLines: Dataset[String], commands: Seq[Seq[String]], rNum: Int): Dataset[String] = {
     val spark = kvLines.sparkSession
     import org.apache.spark.sql.functions._
-    // ltrim \s+ before keying — `iss >> key` skips ALL leading whitespace,
-    // so an indented line must key on its first real token, not "" (same
-    // convention as Engine.plan's line→KV parse)
+    // key = the line→KV parse's key (Engine.plan's rule): `iss >> key`
+    // skips ALL leading whitespace, so an indented line keys on its first
+    // real token, not ""
     val keyed = kvLines.toDF(KV.LineCol)
       .select(
-        split(regexp_replace(col(KV.LineCol), "^\\s+", ""), "\\s+", 2)
-          .getItem(0).as(KV.KeyCol),
+        NativeExprs.lineKv(col(KV.LineCol)).getField(KV.KeyCol).as(KV.KeyCol),
         col(KV.LineCol))
       .repartition(rNum, col(KV.KeyCol))
       .select(col(KV.LineCol)).as[String]

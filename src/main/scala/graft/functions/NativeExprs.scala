@@ -3,10 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the engine's hot paths.
@@ -20,6 +22,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   - [[CosineSim]] / [[DotProd]]  — full whole-stage-codegen loops
   *   - [[Tokens]], [[TextStats]], [[TokenSetCounts]] — one-pass text scans
+  *   - [[LineTokens]], [[LineKv]] — the MapReduce engine's `tokenize` op
+  *     and line→KV split, one pass over the UTF-8 bytes
   *   - [[SimHash64]] — token-hash ±1 bit votes, one pass
   *   - [[MinHashSig]] — k-permutation signature via the standard
   *     two-hash construction h1 + i·h2 (Broder-style), 2 hashes per shingle
@@ -37,6 +41,8 @@ object NativeExprs {
   def cosineSim(a: Column, b: Column): Column = c(CosineSim(e(a), e(b)))
   def dotProd(a: Column, b: Column): Column = c(DotProd(e(a), e(b)))
   def tokens(text: Column): Column = c(Tokens(e(text)))
+  def lineTokens(line: Column, suffix: String): Column = c(LineTokens(e(line), suffix))
+  def lineKv(line: Column): Column = c(LineKv(e(line)))
   def textStats(text: Column, stopwords: Seq[String]): Column =
     c(TextStats(e(text), stopwords))
   def tokenSetCounts(text: Column, sets: Seq[Seq[String]]): Column =
@@ -127,9 +133,26 @@ object NativeExprs {
     out
   }
 
-  /** Whitespace set of Java regex `\s` — keep identical to split("\\s+"). */
-  @inline private[functions] def isWs(ch: Char): Boolean =
-    ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' || ch == '\f' || ch == '\r'
+  /** Whitespace set of Java regex `\s`, `[ \t\n\x0B\f\r]` (9..13 and
+    * 32) — keep identical to split("\\s+"). Takes an Int so one
+    * definition tests UTF-16 chars and UTF-8 bytes alike: every member is
+    * ASCII and no byte of a multi-byte UTF-8 sequence is (those are
+    * ≥ 0x80, negative as a signed Byte), so a byte scan splits exactly
+    * where the regex splits the decoded string. */
+  @inline def isWs(c: Int): Boolean = c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** Bytes [from, until) of `s` followed by `suffix`, as a fresh string
+    * (never a view: the input row's buffer is reused by the scan). */
+  private[functions] def slice(
+      s: UTF8String, from: Int, until: Int, suffix: Array[Byte] = Array.emptyByteArray)
+      : UTF8String = {
+    val len = until - from
+    val out = new Array[Byte](len + suffix.length)
+    Platform.copyMemory(
+      s.getBaseObject, s.getBaseOffset + from, out, Platform.BYTE_ARRAY_OFFSET, len)
+    System.arraycopy(suffix, 0, out, len, suffix.length)
+    UTF8String.fromBytes(out)
+  }
 }
 
 /** Element accessor fragment for float/double arrays in generated code. */
@@ -317,6 +340,90 @@ case class Tokens(child: Expression) extends UnaryExpression with ExpectsInputTy
   override protected def withNewChildInternal(newChild: Expression): Tokens =
     copy(child = newChild)
   override def prettyName: String = "graft_tokens"
+}
+
+/** The MapReduce engine's `tokenize` map op in one pass over the UTF-8
+  * bytes: the [[NativeExprs.isWs]]-separated tokens of a line, case kept,
+  * empties dropped, each followed by `suffix` — exactly
+  * `transform(filter(split(line, "\\s+"), _ != ""), concat(_, suffix))`
+  * minus the regex compile per row and the interpreted lambda per token. */
+case class LineTokens(child: Expression, suffix: String)
+    extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.GraftBridge.AbstractDT] = Seq(StringType)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  private val suffixBytes = suffix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  def kernel(s: UTF8String): ArrayData = nullSafeEval(s).asInstanceOf[ArrayData]
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => {
+      val ref = ctx.addReferenceObj("lineTokensExpr", this, classOf[LineTokens].getName)
+      s"${ev.value} = $ref.kernel($c);"
+    })
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    val n = s.numBytes
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    var i = 0
+    while (i < n) {
+      while (i < n && NativeExprs.isWs(s.getByte(i))) i += 1
+      val start = i
+      while (i < n && !NativeExprs.isWs(s.getByte(i))) i += 1
+      if (i > start) out += NativeExprs.slice(s, start, i, suffixBytes)
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LineTokens =
+    copy(child = newChild)
+  override def prettyName: String = "graft_line_tokens"
+}
+
+/** The MapReduce engine's line→KV rule in one pass over the UTF-8 bytes,
+  * after the reference's `iss >> key` (partition.cpp:30-31,
+  * reduce.cpp:23-27): leading [[NativeExprs.isWs]] skipped, key = the
+  * first token, value = the rest after the whitespace run that ends the
+  * key (empty when there is none; trailing whitespace kept). A line with
+  * no non-whitespace byte yields NULL — the reference's extraction fails
+  * on it and emits nothing. On other lines ≡
+  * `split(regexp_replace(line, "^\\s+", ""), "\\s+", 2)`. */
+case class LineKv(child: Expression) extends UnaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.GraftBridge.AbstractDT] = Seq(StringType)
+  override def dataType: DataType = StructType(Seq(
+    StructField("key", StringType, nullable = false),
+    StructField("value", StringType, nullable = false)))
+  override def nullable: Boolean = true
+
+  def kernel(s: UTF8String): InternalRow = {
+    val n = s.numBytes
+    var i = 0
+    while (i < n && NativeExprs.isWs(s.getByte(i))) i += 1
+    if (i == n) return null
+    val start = i
+    while (i < n && !NativeExprs.isWs(s.getByte(i))) i += 1
+    val key = NativeExprs.slice(s, start, i)
+    while (i < n && NativeExprs.isWs(s.getByte(i))) i += 1
+    InternalRow(key, NativeExprs.slice(s, i, n))
+  }
+
+  // not nullSafeCodeGen: that pins isNull to the child's, and a non-null
+  // line can still yield NULL here
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("lineKvExpr", this, classOf[LineKv].getName)
+    val in = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${in.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        ${in.isNull} ? null : $ref.kernel(${in.value});
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+
+  override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[UTF8String])
+
+  override protected def withNewChildInternal(newChild: Expression): LineKv =
+    copy(child = newChild)
+  override def prettyName: String = "graft_line_kv"
 }
 
 /** One-pass text statistics used by token-count and quality scoring:

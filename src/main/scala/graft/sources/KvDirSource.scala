@@ -21,6 +21,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.functions.NativeExprs
+
 /** DataSource V2 reader for the reference engine's NATIVE storage format:
   * flat directories of text files holding one `"<key> <value>"` record per
   * line (reference: `DistrStorage.java:88-102` — bytes in flat dirs;
@@ -77,30 +79,31 @@ object KvDirSource {
   val Schema: StructType =
     StructType(Seq(StructField("key", StringType), StructField("value", StringType)))
 
-  /** The engine's line→KV rule, one definition for this reader and the
-    * parity spec: None = dropped (whitespace-only). */
+  /** The engine's line→KV rule (`graft.functions.LineKv` on the engine path),
+    * one definition for this reader and the parity spec: None = dropped
+    * (whitespace-only). One char scan over the `\s` class of
+    * [[NativeExprs.isWs]]: leading whitespace skipped, key = first token,
+    * value = the rest after the run that ends the key. */
   def parse(line: String): Option[(String, String)] = {
-    val stripped = line.replaceFirst("^\\s+", "")
-    if (stripped.isEmpty) None
+    val n = line.length
+    var i = 0
+    while (i < n && NativeExprs.isWs(line.charAt(i))) i += 1
+    if (i == n) None
     else {
-      val parts = stripped.split("\\s+", 2)
-      Some((parts(0), if (parts.length > 1) parts(1) else ""))
+      val start = i
+      while (i < n && !NativeExprs.isWs(line.charAt(i))) i += 1
+      val key = line.substring(start, i)
+      while (i < n && NativeExprs.isWs(line.charAt(i))) i += 1
+      Some((key, line.substring(i)))
     }
   }
-
-  /** java-regex `\s` membership = [ \t\n\x0B\f\r] — ONE definition
-    * for [[isRecordLine]]'s record test and the writer's
-    * representability checks, so neither can drift from [[parse]]'s
-    * strip/split class. */
-  def isSpace(c: Char): Boolean =
-    c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
 
   /** `parse(line).isDefined`, allocation-free: a line is a record iff it
     * contains any char outside `\s`. */
   def isRecordLine(line: String): Boolean = {
     var i = 0
     while (i < line.length) {
-      if (!isSpace(line.charAt(i))) return true
+      if (!NativeExprs.isWs(line.charAt(i))) return true
       i += 1
     }
     false
@@ -379,9 +382,9 @@ private[sources] class KvDataWriter(
     require(k != null && v != null, "graft-kv: null key or value is not representable")
     val ks = k.toString
     val vs = v.toString
-    require(ks.nonEmpty && !ks.exists(KvDirSource.isSpace),
+    require(ks.nonEmpty && !ks.exists(c => NativeExprs.isWs(c)),
       s"graft-kv: key must be non-empty with no whitespace, got '$ks'")
-    require(vs.isEmpty || !KvDirSource.isSpace(vs.charAt(0)),
+    require(vs.isEmpty || !NativeExprs.isWs(vs.charAt(0)),
       s"graft-kv: value must not start with whitespace (the separator swallows it): '$vs'")
     require(!vs.exists(c => c == '\n' || c == '\r'),
       s"graft-kv: value must not contain line terminators: '$vs'")

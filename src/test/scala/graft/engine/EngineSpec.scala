@@ -2,6 +2,10 @@ package graft.engine
 
 import java.nio.file.{Files, Path}
 import graft.SparkSpec
+import graft.functions.{LineKv, LineTokens}
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, RegExpReplace, RLike, StringSplit}
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import scala.jdk.CollectionConverters._
 
 /** Golden tests mirroring the reference's test corpus:
@@ -182,6 +186,40 @@ class EngineSpec extends SparkSpec {
       spark,
       BatchSpec(List("lowercase", "tokenize"), List("sum_ints"), in.toString, out.toString, -1, 1))
     assert(readOutput(out) === Map("a" -> "1", "b" -> "2"))
+  }
+
+  test("built-in map ops and the line→KV parse run as native kernels inside whole-stage codegen") {
+    // plan guard for the engine's hot path: no per-row regex (RLike,
+    // RegExpReplace, StringSplit compile a Pattern per call) and no
+    // interpreted lambda (HigherOrderFunction) on any built-in map op, and
+    // every operator evaluating a line kernel stays in a codegen stage
+    def isKernel(e: Expression) = e.isInstanceOf[LineKv] || e.isInstanceOf[LineTokens]
+    // operators NOT compiled by a WholeStageCodegenExec (AQE stages entered)
+    def interpreted(p: SparkPlan): Seq[SparkPlan] = p match {
+      case w: WholeStageCodegenExec => stageInputs(w.child)
+      case a: AdaptiveSparkPlanExec => interpreted(a.executedPlan)
+      case q: QueryStageExec => interpreted(q.plan)
+      case other => other +: other.children.flatMap(interpreted)
+    }
+    def stageInputs(p: SparkPlan): Seq[SparkPlan] = p match {
+      case i: InputAdapter => interpreted(i.child)
+      case other => other.children.flatMap(stageInputs)
+    }
+    val in = writeCorpus(Seq("a b", "\tc  d", " "))
+    Seq("tokenize", "identity", "lowercase", "drop_empty").foreach { op =>
+      val df = Engine.plan(spark, BatchSpec(List(op), List("count"), in.toString, "unused", -1, 1))
+      val opt = df.queryExecution.optimizedPlan
+      val slow = opt.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: RLike | _: RegExpReplace | _: StringSplit | _: HigherOrderFunction) => e
+      }))
+      assert(slow.isEmpty, s"$op: regex/lambda expression in the plan:\n$opt")
+      assert(opt.exists(_.expressions.exists(_.exists(_.isInstanceOf[LineKv]))),
+        s"$op: no LineKv parse in the plan:\n$opt")
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val outside = interpreted(plan).filter(_.expressions.exists(_.exists(isKernel)))
+      assert(outside.isEmpty, s"$op: line kernel outside whole-stage codegen:\n$plan")
+    }
   }
 
   test("BatchSpec parses the reference-shaped JSON") {
