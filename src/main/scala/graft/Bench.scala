@@ -112,6 +112,19 @@ object Bench {
     self + children.map(shuffleWriteBytes).sum
   }
 
+  /** JSON string literal: quote, backslash and ALL control chars (<0x20)
+    * escaped — the one escaper for Bench's summary line and Verify's
+    * oracle_sql.json (a tab or CR in builder-authored SQL would otherwise
+    * make the driver's json.load fail and silently zero the round's
+    * correctness). */
+  private[graft] def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => "\\u%04x".formatLocal(Locale.ROOT, c.toInt)
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -274,13 +287,6 @@ object Bench {
       (q.name, med, times)
     }
     def num(t: Double) = "%.3f".formatLocal(Locale.ROOT, t)
-    def jstr(s: String) =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => "\\u%04x".formatLocal(Locale.ROOT, c.toInt)
-        case c => c.toString
-      } + "\""
     val attempts = results
       .map { case (k, _, ts) => jstr(k) + ":" + ts.map(num).mkString("[", ",", "]") }
       .mkString("{", ",", "}")

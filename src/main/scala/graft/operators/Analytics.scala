@@ -216,7 +216,6 @@ object Analytics {
   }
 
   private val qSkylineSql = {
-    val pc = asScaledSql("p_retailprice", 2)
     val pcB = asScaledSql("b.p_retailprice", 2)
     val pcA = asScaledSql("a.p_retailprice", 2)
     s"""SELECT a.p_partkey, $pcA AS price_c, a.p_size

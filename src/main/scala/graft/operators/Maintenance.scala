@@ -984,8 +984,6 @@ object Maintenance {
     val victims = cust.filter(isForgotten(col("c_custkey"))).select("c_custkey")
     val ordDel = ord.join(victims, col("o_custkey") === col("c_custkey"), "left_semi")
     val ordKeep = ord.join(victims, col("o_custkey") === col("c_custkey"), "left_anti")
-    val liDel = li.join(
-      ordDel.select("o_orderkey"), col("l_orderkey") === col("o_orderkey"), "left_semi")
     val liKeep = li.join(
       ordDel.select("o_orderkey"), col("l_orderkey") === col("o_orderkey"), "left_anti")
     // `kept` is the surviving rows projected to their digest column `h`

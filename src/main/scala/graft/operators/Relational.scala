@@ -1914,7 +1914,6 @@ object Relational {
   /** Custom typed Aggregator (UDAF surface): quantity-weighted average
     * price per return flag, buffered as exact integer sums. */
   def qWeightedAvg(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val wavg = udaf(graft.functions.WeightedAvgCents)
     Tables.lineitem(s, d)
       .groupBy("l_returnflag")

@@ -864,8 +864,9 @@ object Similarity {
     * assertion hold at every swept SF, not just the calibration one:
     * (1) the shortlist covers `max(PqShortlist, ⌈CheckShortlistFrac·n⌉)`
     * candidates, sized from the measured worst ADC rank of the true
-    * top-10 across SFs (22% of n at sf0.001, 14% at sf0.1 — see
-    * NOTES_BUILD round 12) with ~2× margin; (2) the cut is by VALUE, not
+    * top-10 across SFs (round-12 readings: 110/500 = 22% of n at
+    * sf0.001, 271/2000 = 14% at sf0.1 — see NOTES_BUILD round 12) with
+    * ~2× margin; (2) the cut is by VALUE, not
     * row count — every row tied with the boundary ADC score enters the
     * re-rank, so verbatim replication (the 10×/100× sweep modes, where
     * replicas carry identical codes hence identical left-to-right-folded
@@ -975,50 +976,6 @@ object Similarity {
         val cand = probedCandidates(e, cents, qraw, IvfPqProbes).select("vec_id")
         adcRerank(e, s.table(cdT).join(cand, "vec_id"), qraw, loadPqBooks(s, cbT))
     }
-  }
-
-  /** Calibration probe backing [[tools.PqProbe]]: ADC rank of each true
-    * top-10 member under the plain-PQ and IVF-PQ candidate orderings.
-    * Rank is 1-based over (adc desc, vec_id); -1 = not in the candidate
-    * set at all (IVF probe miss). Sizes [[CheckShortlistFrac]] /
-    * [[CheckIvfProbes]]. */
-  private[graft] def pqProbe(s: SparkSession, d: String): (Long, Seq[Long], Seq[Long]) = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding").as("v")).cache()
-    val n = e.count()
-    val qraw = e.filter(col("vec_id") === 0).collect().head.getSeq[Float](1).map(_.toDouble)
-    val (cbT, cdT) = ensurePqIndex(s, d, e)
-    val books = loadPqBooks(s, cbT)
-    val top10 = qTopKExact(s, d).select("vec_id")
-    def ranksIn(codedCand: DataFrame): Seq[Long] = {
-      import org.apache.spark.sql.expressions.Window
-      // the probe MUST rank by the same adcScores the gate twins use —
-      // a private copy here could drift and calibrate the check
-      // shortlist against a different ordering than the one shipped
-      val ranked = adcScores(codedCand, qraw, books)
-        .withColumn("rk", row_number().over(
-          Window.orderBy(col("adc").desc, col("vec_id"))))
-      top10.join(ranked, Seq("vec_id"), "left")
-        .select(coalesce(col("rk").cast("long"), lit(-1L)))
-        .collect().map(_.getLong(0)).sorted.toSeq
-    }
-    val plain = ranksIn(s.table(cdT).filter(col("vec_id") =!= 0))
-    val cents: Array[(Int, Seq[Double])] = e
-      .filter(col("vec_id") < IvfCells)
-      .collect()
-      .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).map(_.toDouble)))
-      .sortBy(_._1)
-    val cand = probedCandidates(e, cents, qraw, IvfPqProbes).select("vec_id")
-    val ivf = ranksIn(s.table(cdT).join(cand, "vec_id"))
-    // probe-order rank of each top-10 member's cell (1-based): how many
-    // cells IVF must probe before that member is even a candidate
-    val cellOrder = probeCells(cents, qraw, cents.length)
-    val cellRankOf = cellOrder.zipWithIndex.map { case (c, i) => (c, i + 1) }.toMap
-    val cellRanks = top10
-      .join(e.withColumn("cell", nearestCell(cents, col("v"))), "vec_id")
-      .select("cell").collect()
-      .map(r => cellRankOf(r.getInt(0))).sorted.toSeq
-    println(s"  cellRanksOfTrueTop10=${cellRanks.mkString(",")} nlist=${cents.length}")
-    (n, plain, ivf)
   }
 
   /** Per-label mean embedding — the "embedding pooling" aggregation of a

@@ -40,7 +40,6 @@ object TextOps {
   private[operators] val stopwordList =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
   private val stopwords = stopwordList
-  private def inList(t: Column, words: Seq[String]): Column = t.isin(words.map(_.asInstanceOf[Any]): _*)
   private def sqlList(words: Seq[String]): String = words.mkString("('", "', '", "')")
 
   /** Classic wordcount, Spark-first: explode → partial-agg count → order.

@@ -26,12 +26,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * in-memory-catalog stand-in for that metastore.
   *
   * Concurrency: two JVMs ensuring the same MISSING table are serialized
-  * by a per-table build lock (`<name>._graft_lock`, atomic createNewFile
-  * in the warehouse root — see [[ensureVia]]): only the lock holder may
-  * clear leftovers and write, and a waiter re-checks the reuse marker
-  * each poll tick so it adopts the holder's finished files instead of
-  * rebuilding. The marker itself is written only after a complete build,
-  * so a half-built table can never be re-registered.
+  * by a per-table build lock (an OS file lock on `<name>._graft_lock` in
+  * the warehouse root, which the kernel releases when the holder dies —
+  * see [[ensureVia]]): only the lock holder may clear leftovers and
+  * write, and a waiter re-checks the reuse marker each poll tick so it
+  * adopts the holder's finished files instead of rebuilding. The marker
+  * itself is written only after a complete build, so a half-built table
+  * can never be re-registered.
   */
 object Warehouse {
 
@@ -239,38 +240,6 @@ object Warehouse {
 
   // ------------------------------------------------ cross-JVM build lock
 
-  /** Lock-steal age. Overridable (system property, milliseconds) so the
-    * spec can exercise the stale path without a wall-clock wait. Since
-    * r14 the HOLDER HEARTBEATS the lock (refreshes its mtime every
-    * [[lockStaleMs]]/4 for the duration of the build — see [[ensureVia]]),
-    * so an age past this bound means the holder CRASHED, not that it is
-    * slow: an hour-long 100 TB index build keeps its lock fresh the whole
-    * time, while a killed JVM's leaked lock goes cold and stalls the next
-    * ensure for at most this long. The only way a LIVE holder loses its
-    * lock is a JVM pause longer than the full stale age — and the
-    * ownership token (see below) makes even that loud instead of silent. */
-  private def lockStaleMs: Long =
-    sys.props.get("graft.warehouse.lockStaleMs").map(_.toLong).getOrElse(10L * 60 * 1000)
-
-  /** Single shared daemon for all lock heartbeats (one tick task per
-    * in-flight build; builds are rare and the tick is two syscalls). */
-  private lazy val heartbeater =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "graft-warehouse-lock-heartbeat")
-      t.setDaemon(true)
-      t
-    }
-
-  /** The ownership token stored in a lock file, None for an empty or
-    * unreadable lock (e.g. a foreign holder that crashed mid-stamp, or a
-    * pre-r14 bare lock). */
-  private def readLockToken(lock: java.io.File): Option[String] =
-    try {
-      val s = new String(
-        java.nio.file.Files.readAllBytes(lock.toPath), "UTF-8").trim
-      if (s.isEmpty) None else Some(s)
-    } catch { case _: java.io.IOException => None }
-
   /** Wall-clock seconds of each artifact build this JVM actually RAN
     * (cache misses only — reuse/adoption records nothing). The bench
     * drains this to report one-off index-build cost separately from
@@ -296,6 +265,11 @@ object Warehouse {
   private val nameMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** Canonical paths of the lock files this JVM holds right now — the
+    * guard that turns a nested acquisition into an error (see
+    * [[withFileLock]]). */
+  private val heldLocks = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** Shared miss-path for every ensure variant: existence check, then —
     * when the caller opted into reuse and a fingerprint-matching marker
     * is present — re-registration of the previous JVM's files; otherwise
@@ -304,29 +278,16 @@ object Warehouse {
     *
     * The lock closes the two-writer race the r12 marker protocol left
     * open: without it, JVM B's clearLeftover could delete JVM A's
-    * MID-BUILD table directory. Only the JVM that atomically creates
-    * `<name>._graft_lock` (File.createNewFile) may clear-and-write; a
-    * concurrent ensure polls, re-checking the reuse marker each tick, so
-    * when the holder publishes, the waiter re-registers the finished
-    * files instead of ever having had a window to delete them. A lock
-    * whose mtime is older than [[lockStaleMs]] is presumed crash-leaked
-    * and STOLEN ATOMICALLY: the stealer must win a rename of the stale
-    * lock to a unique name before recreating it — delete-then-recreate
-    * would let two stealers both enter the critical section (the second
-    * delete would remove the first stealer's FRESH lock). Within one JVM
-    * a per-table monitor covers the same critical section without
+    * MID-BUILD table directory. Only the JVM holding the OS lock on
+    * `<name>._graft_lock` may clear-and-write; a concurrent ensure polls,
+    * re-checking the reuse marker each tick, so when the holder
+    * publishes, the waiter re-registers the finished files instead of
+    * ever having had a window to delete them. The kernel releases a
+    * holder's lock the moment its process dies, so a crashed build
+    * stalls the next ensure by at most one poll tick, and a live build —
+    * however slow or paused — never loses its lock. Within one JVM a
+    * per-table monitor covers the same critical section without
     * serializing unrelated tables.
-    *
-    * Liveness vs staleness (r14): the holder stamps a UNIQUE OWNER TOKEN
-    * into the lock at acquisition and HEARTBEATS its mtime every
-    * lockStaleMs/4 for the duration of the build, so a live build — no
-    * matter how slow — is never mistaken for a crash. Before publishing
-    * the marker and before releasing, the holder re-reads the lock and
-    * proceeds only if its token is still there; a holder that somehow
-    * lost its lock anyway (a JVM pause longer than the full stale age)
-    * aborts the publish LOUDLY instead of racing the stealer — it never
-    * deletes the stealer's fresh lock and never writes a marker over a
-    * directory the stealer may be rewriting.
     *
     * Staleness of a REGISTERED table (r14): when the table already
     * exists in this JVM's catalog AND the caller opted into reuse, the
@@ -354,7 +315,7 @@ object Warehouse {
       fp.isDefined && tableDir(s, name).isDirectory && reregister(s, name, fp.get)
     locked[Unit](s, name)(
       preLock = () => if (existsFresh() || adopt()) Some(()) else None,
-      onWaitTick = () => if (adopt()) Some(()) else None) { owned =>
+      onWaitTick = () => if (adopt()) Some(()) else None) {
       // re-check under the lock: the prior holder may have published a
       // marker between our pre-lock probe and the acquisition (or, for a
       // second in-JVM thread, rebuilt the table). refreshTable: if a
@@ -375,91 +336,73 @@ object Warehouse {
         val t0 = System.nanoTime()
         write
         buildSeconds.put(name, (System.nanoTime() - t0) / 1e9)
-        if (owned()) fp.foreach { f =>
+        // published only after a complete build: a half-built table never
+        // carries a marker, so it can never be re-registered
+        fp.foreach { f =>
           println(s"[warehouse] build $name")
           writeMeta(s, name, f)
-        } else println(s"[warehouse] LOCK STOLEN mid-build for $name " +
-          "(JVM paused past the stale age?) — marker NOT published; the " +
-          "stealer owns the directory now and this JVM's copy is suspect")
+        }
       }
     }
   }
 
   /** Cross-JVM mutual exclusion on `name` — the bare locking primitive
-    * behind [[ensureVia]] (in-JVM per-table monitor + heartbeated
-    * owner-token file lock, crash-steal included), exposed for
-    * multi-step warehouse protocols that need more than a single table
-    * build held consistent: [[graft.streaming.VersionedTable]] wraps its
-    * whole read-merge-commit-retire sequence so two writers serialize
-    * instead of both merging from the same base and silently dropping
-    * one batch's contribution. Reentrancy is NOT provided — nesting the
-    * same name deadlocks; nested DIFFERENT names are fine when every
-    * caller nests in the same order. */
+    * behind [[ensureVia]] (in-JVM per-table monitor + OS file lock),
+    * exposed for multi-step warehouse protocols that need more than a
+    * single table build held consistent: [[graft.streaming.VersionedTable]]
+    * wraps its whole read-merge-commit-retire sequence so two writers
+    * serialize instead of both merging from the same base and silently
+    * dropping one batch's contribution. Not reentrant: nesting the same
+    * name throws an IllegalStateException (the outer lock stays held);
+    * nested DIFFERENT names are fine when every caller nests in the same
+    * order. */
   def withTableLock[A](s: SparkSession, name: String)(body: => A): A =
-    locked[A](s, name)(() => None, () => None)(_ => body)
+    locked[A](s, name)(() => None, () => None)(body)
 
   /** The shared lock protocol: under `name`'s in-JVM monitor, first try
-    * `preLock` (fast path, no file I/O beyond what it does itself); then
-    * acquire the cross-JVM file lock — polling 100ms ticks against a
-    * live holder, running `onWaitTick` each tick (ensureVia adopts a
-    * holder's published marker there), stealing atomically (rename-won)
-    * only when the lock has gone heartbeat-cold ([[lockStaleMs]]); then
-    * run `body` under a heartbeat that keeps the lock demonstrably
-    * alive, handing it an `owned` probe for publish-gating. The lock is
-    * deleted on exit only while still owned — after a pathological
-    * steal the file at this path is the STEALER's and is left alone. */
+    * `preLock` (fast path, no lock-file I/O); then run `body` under the
+    * cross-JVM file lock, running `onWaitTick` on each poll tick while
+    * another JVM holds it (ensureVia adopts a holder's published marker
+    * there). */
   private def locked[A](s: SparkSession, name: String)(
-      preLock: () => Option[A], onWaitTick: () => Option[A])(
-      body: (() => Boolean) => A): A =
+      preLock: () => Option[A], onWaitTick: () => Option[A])(body: => A): A =
     nameMonitors.computeIfAbsent(name.toLowerCase, _ => new Object) synchronized {
-      preLock() match {
-        case Some(a) => a
-        case None =>
-          val lock = lockFile(s, name)
-          val token = java.util.UUID.randomUUID().toString
-          var early: Option[A] = None
-          while (early.isEmpty && !lock.createNewFile()) {
-            if (System.currentTimeMillis() - lock.lastModified > lockStaleMs) {
-              // atomic steal: only the JVM whose rename succeeds may
-              // proceed to recreate; a losing stealer loops and waits on
-              // the winner's fresh lock
-              val grave = new java.io.File(
-                lock.getParentFile, lock.getName + s".stale${System.nanoTime()}")
-              try {
-                java.nio.file.Files.move(lock.toPath, grave.toPath)
-                grave.delete()
-              } catch { case _: java.io.IOException => /* lost the steal race */ }
-            } else {
-              Thread.sleep(100)
-              early = onWaitTick()
-            }
-          }
-          early match {
-            case Some(a) => a
-            case None =>
-              // we created the lock: stamp ownership, then keep it
-              // demonstrably alive for the whole critical section (ticks
-              // only while still ours — after a pathological steal the
-              // file at this path is the STEALER's). A failed stamp must
-              // delete the lock we just created: a leaked EMPTY lock has
-              // a fresh mtime, so it would stall every ensure on this
-              // table for the full stale age
-              try java.nio.file.Files.write(lock.toPath, token.getBytes("UTF-8"))
-              catch { case e: Throwable => lock.delete(); throw e }
-              def owned: Boolean = readLockToken(lock).contains(token)
-              val tick = math.max(lockStaleMs / 4, 25L)
-              val hb = heartbeater.scheduleAtFixedRate(
-                () => if (owned) lock.setLastModified(System.currentTimeMillis()),
-                tick, tick, java.util.concurrent.TimeUnit.MILLISECONDS)
-              try body(() => owned)
-              finally {
-                hb.cancel(false)
-                if (owned) lock.delete()
-                // else: the lock at this path belongs to the stealer
-              }
-          }
-      }
+      preLock().getOrElse(withFileLock(lockFile(s, name), onWaitTick)(body))
     }
+
+  /** Run `body` holding an exclusive OS lock (`FileChannel.tryLock`, an
+    * fcntl lock on POSIX) on `lock`, polling every 100ms while another
+    * process holds it; a `Some` from `onWaitTick` ends the wait without
+    * acquiring. File locks are per-process, so two rules keep them sound:
+    *   - the lock file is never deleted: a waiter already holding the old
+    *     inode open would lock it while a third process locks a fresh
+    *     file at the same path;
+    *   - this JVM opens the lock file only here, once per hold: closing
+    *     ANY second descriptor on the file drops the process's lock while
+    *     `FileLock.isValid` still reports it held. A nested acquisition
+    *     of a held path therefore fails before it opens anything. */
+  private[sources] def withFileLock[A](lock: java.io.File, onWaitTick: () => Option[A])(
+      body: => A): A = {
+    val path = lock.getCanonicalPath
+    if (!heldLocks.add(path)) throw new IllegalStateException(
+      s"warehouse lock $path is already held by this JVM: nested acquisition " +
+        "of the same name would wait on itself forever")
+    try {
+      val ch = java.nio.channels.FileChannel.open(lock.toPath,
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+      // closing the channel releases the lock
+      try {
+        var held = ch.tryLock() != null
+        var early: Option[A] = None
+        while (!held && early.isEmpty) {
+          Thread.sleep(100)
+          early = onWaitTick()
+          if (early.isEmpty) held = ch.tryLock() != null
+        }
+        early.getOrElse(body)
+      } finally ch.close()
+    } finally heldLocks.remove(path)
+  }
 
   /** True when `name`'s stored reuse marker exists AND records a
     * fingerprint other than `fresh` — i.e. the registered table no

@@ -147,15 +147,17 @@ object VersionedTable {
     *
     * Concurrency (r14): the whole read-merge-commit-retire sequence runs
     * under the warehouse's cross-JVM table lock on the marker-table
-    * name ([[graft.sources.Warehouse.withTableLock]] — heartbeated, so a
-    * slow merge is never steal-eligible). Two interleaved writers in one
+    * name ([[graft.sources.Warehouse.withTableLock]] — an OS file lock:
+    * a slow merge holds it for as long as it runs, and the kernel frees
+    * a crashed writer's lock at once). Two interleaved writers in one
     * application therefore SERIALIZE: the second acquires after the
     * first's marker advance, re-reads the committed base, and merges on
     * top of it — without the lock both would merge from the same base
     * and the later commit would silently drop the earlier batch's
     * contribution. A same-batch replay arriving second sees the advanced
     * marker and skips as before. Within one micro-batch stream this lock
-    * is uncontended (one writer) and costs two file ops per commit.
+    * is uncontended (one writer) and costs one lock-file open and one
+    * uncontended `tryLock` per commit.
     *
     * Cross-JVM honesty: the lock gives mutual exclusion across JVMs,
     * but marker VISIBILITY does not extend to a second JVM that never

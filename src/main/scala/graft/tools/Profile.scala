@@ -22,7 +22,7 @@ object Profile {
     for (name <- names; attempt <- 1 to 3) {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.executedPlan // force analysis+optimization+physical
+      df.queryExecution.executedPlan // force analysis+optimization+physical
       val t1 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val t2 = System.nanoTime()

@@ -61,7 +61,6 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("salted aggregation equals plain groupBy (skew-safe decomposition)") {
-    import spark.implicits._
     // heavy skew: 90% of rows share one key
     val df = spark.range(10000)
       .select(when(col("id") % 10 =!= 0, lit("hot")).otherwise(col("id").cast("string")).as("k"))
@@ -72,7 +71,6 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("salted join equals the plain join on skewed data") {
-    import spark.implicits._
     // 90% of left rows share the hot key
     val left = spark.range(20000)
       .select(

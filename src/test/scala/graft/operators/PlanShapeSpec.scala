@@ -468,7 +468,6 @@ class PlanShapeSpec extends SparkSpec {
 
   test("AQE splits a skewed join partition at runtime") {
     val s2 = spark.newSession()
-    import s2.implicits._
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
     // shrink the skew thresholds so test-sized data exhibits the 100 TB
     // behavior: one hot key ≫ advisory partition size → AQE must split
@@ -497,7 +496,6 @@ class PlanShapeSpec extends SparkSpec {
     // salted-vs-AQE A/B on this same shape lives in tools/SkewAb; numbers
     // in NOTES_BUILD.md.)
     val s2 = spark.newSession()
-    import s2.implicits._
     val obs = s2.range(200000).select(
       lit("planted.hot").as("tbl_col"),
       when(col("id") % 100 =!= 0, lit(7L)).otherwise(col("id")).as("k"))
@@ -515,7 +513,6 @@ class PlanShapeSpec extends SparkSpec {
     // the audit test; the A/B timing (auto == manual salted class, 8×
     // over unmitigated) is tools/SkewAb leg d, numbers in NOTES_BUILD.md.
     val s2 = spark.newSession()
-    import s2.implicits._
     val hot = s2.range(200000).select(
       when(col("id") % 100 =!= 0, lit(7L)).otherwise(col("id")).as("k"),
       col("id").as("payload"))
@@ -543,7 +540,6 @@ class PlanShapeSpec extends SparkSpec {
     // synthetic hub graph with the 100 TB behavior simulated by shrunken
     // skew thresholds — AQE must split the hot partition, not spill on it.
     val s2 = spark.newSession()
-    import s2.implicits._
     s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
     s2.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "64KB")

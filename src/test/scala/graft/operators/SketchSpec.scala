@@ -296,7 +296,8 @@ class SketchSpec extends SparkSpec {
 
   test("banded PQ check twins recover the exact top-10 at an SF where the production shortlist misses") {
     // sf0.001 is the calibrated counterexample: the true top-10's worst
-    // ADC rank is 110 of 500 (PqProbe round-12 reading), so the headline
+    // ADC rank is 110 of 500 (the round-12 reading recorded in
+    // Similarity.adcRerankBanded's doc), so the headline
     // shortlist of 50 provably cannot recover it — the banded twins'
     // SF-proportional tie-inclusive cut must. This is the spec teeth
     // behind the q_sim_pq_check / q_sim_ivfpq_check gate rows being

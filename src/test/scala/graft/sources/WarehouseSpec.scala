@@ -1,8 +1,12 @@
 package graft.sources
 
 import graft.SparkSpec
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 /** Cross-JVM warehouse artifact reuse ([[Warehouse.ensureVia]]'s
   * `reuseFrom` path): a fingerprint-matching leftover directory is
@@ -12,7 +16,9 @@ import org.apache.spark.sql.functions._
   * simulated by saving the table files aside, dropping the catalog entry
   * (which, for a managed table, deletes the files), and restoring the
   * files — exactly the state a fresh JVM sees over a shared warehouse
-  * dir. */
+  * dir. The build-lock cases fork a real second JVM ([[WarehouseLockFork]],
+  * no Spark) that takes or probes the lock through the library's own
+  * [[Warehouse.withFileLock]]. */
 class WarehouseSpec extends SparkSpec {
 
   private def warehouseDir: java.io.File = new java.io.File(
@@ -28,6 +34,37 @@ class WarehouseSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     if (dir.exists()) Warehouse.rm(dir)
     java.nio.file.Files.move(aside.toPath, dir.toPath)
+  }
+
+  /** `<name>._graft_lock`. This JVM only hands the path to forks and
+    * never opens the file itself: closing a second descriptor on it
+    * would drop a lock this JVM holds. */
+  private def lockPath(name: String): java.io.File =
+    new java.io.File(warehouseDir, name.toLowerCase + "._graft_lock")
+
+  /** A plain JVM running [[WarehouseLockFork]] `mode` on `lock`. */
+  private def fork(mode: String, lock: java.io.File): Process =
+    new ProcessBuilder(
+      new java.io.File(System.getProperty("java.home"), "bin/java").getPath,
+      "-Xmx64m", "-XX:TieredStopAtLevel=1",
+      "-cp", System.getProperty("java.class.path"),
+      WarehouseLockFork.getClass.getName.stripSuffix("$"), mode, lock.getPath)
+      .redirectErrorStream(true).start()
+
+  /** The first status word the fork prints (EOF if it exits without one). */
+  private def status(p: Process): String = {
+    val in = new java.io.BufferedReader(
+      new java.io.InputStreamReader(p.getInputStream, "UTF-8"))
+    Await.result(Future(Iterator.continually(in.readLine()).takeWhile(_ != null)
+      .find(Set("HELD", "BLOCKED", "ACQUIRED")).getOrElse("EOF")), 60.seconds)
+  }
+
+  private def stop(p: Process): Unit = { p.destroyForcibly(); p.waitFor() }
+
+  /** One foreign `tryLock` attempt on `lock`: BLOCKED or ACQUIRED. */
+  private def probe(lock: java.io.File): String = {
+    val p = fork("probe", lock)
+    try status(p) finally stop(p)
   }
 
   private val tempDirs = scala.collection.mutable.ListBuffer.empty[java.io.File]
@@ -51,6 +88,7 @@ class WarehouseSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       val dir = new java.io.File(warehouseDir, t.toLowerCase)
       if (dir.exists()) Warehouse.rm(dir)
+      lockPath(t).delete()
     }
     tempDirs.foreach(Warehouse.rm)
     super.afterAll()
@@ -203,166 +241,99 @@ class WarehouseSpec extends SparkSpec {
     val tblDir = new java.io.File(warehouseDir, name.toLowerCase)
     val metaF = new java.io.File(tblDir, "_graft_meta")
     val metaAside = new java.io.File(tblDir.getParentFile, name.toLowerCase + "__meta_aside")
-    // simulate ANOTHER JVM mid-build: its lock is held, its table dir has
-    // files but no marker yet (the exact state r12's clearLeftover would
-    // have deleted from under it)
+    // ANOTHER JVM mid-build: it holds the lock, its table dir has files
+    // but no marker yet (the exact state r12's clearLeftover would have
+    // deleted from under it)
     java.nio.file.Files.move(metaF.toPath, metaAside.toPath)
-    val lock = new java.io.File(warehouseDir, name.toLowerCase + "._graft_lock")
-    assert(lock.createNewFile())
-    val dataFiles = tblDir.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(dataFiles.nonEmpty)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val waiter = Future(build())
-    Thread.sleep(800)
-    assert(!waiter.isCompleted, "ensure must wait on the holder's lock")
-    assert(dataFiles.forall(_.exists()),
-      "a waiting ensure deleted the lock holder's mid-build files")
-    // the holder finishes: marker published, lock released
-    java.nio.file.Files.move(metaAside.toPath, metaF.toPath)
-    assert(lock.delete())
-    Await.result(waiter, 30.seconds)
-    assert(builds === 1, "the waiter must adopt the holder's published files, not rebuild")
-    assert(spark.table(name).count() === 3)
-  }
-
-  test("a stale (crash-leaked) lock is stolen and the build proceeds") {
-    val src = freshSrcDir("stale")
-    val name = Warehouse.tableName("graft_spec_reuse_s", src.toString)
-    madeTables += name
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val lock = new java.io.File(warehouseDir, name.toLowerCase + "._graft_lock")
-    assert(lock.createNewFile())
-    assert(lock.setLastModified(System.currentTimeMillis() - 2L * 3600 * 1000))
-    var builds = 0
-    Warehouse.ensureVia(spark, name, Some(src.toString)) {
-      builds += 1
-      spark.read.parquet(new java.io.File(src, "t.parquet").toString)
-        .write.saveAsTable(name)
-    }
-    assert(builds === 1, "an hours-old lock must be presumed crash-leaked and stolen")
-    assert(!lock.exists(), "the stolen-and-reacquired lock must be released after the build")
-    assert(spark.table(name).count() === 3)
-  }
-
-  /** Run `body` with the lock-steal age lowered to `ms`, restoring the
-    * previous value (or absence) afterwards. */
-  private def withStaleMs[A](ms: Long)(body: => A): A = {
-    val key = "graft.warehouse.lockStaleMs"
-    val prev = sys.props.get(key)
-    sys.props(key) = ms.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props -= key
-    }
-  }
-
-  test("a live holder heartbeats its lock: a build slower than the stale age keeps a fresh mtime and is not steal-eligible") {
-    withStaleMs(1000) {
-      val src = freshSrcDir("slow")
-      val name = Warehouse.tableName("graft_spec_reuse_slow", src.toString)
-      madeTables += name
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val lock = new java.io.File(warehouseDir, name.toLowerCase + "._graft_lock")
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
-      var builds = 0
-      val holder = Future(Warehouse.ensureVia(spark, name, Some(src.toString)) {
-        builds += 1
-        Thread.sleep(2600) // 2.6x the stale age — a "slow" build
-        spark.read.parquet(new java.io.File(src, "t.parquet").toString)
-          .write.saveAsTable(name)
-      })
-      // past 2x the stale age the build is still running, yet the lock's
-      // mtime must be recent — the exact predicate a foreign JVM's steal
-      // check reads, so a heartbeating live build can never be stolen
-      Thread.sleep(2200)
-      assert(!holder.isCompleted, "the slow build should still be running")
-      assert(lock.exists(), "the holder's lock vanished mid-build")
-      val age = System.currentTimeMillis() - lock.lastModified
-      assert(age < 1000, s"heartbeat failed: lock mtime is ${age}ms old (>= stale age)")
-      Await.result(holder, 30.seconds)
-      assert(builds === 1)
-      assert(!lock.exists(), "lock must be released after the slow build")
-      assert(spark.table(name).count() === 3)
-    }
-  }
-
-  test("a heartbeating FOREIGN lock is waited on past the stale age, never stolen") {
-    withStaleMs(800) {
-      val src = freshSrcDir("flive")
-      val name = Warehouse.tableName("graft_spec_reuse_fl", src.toString)
-      madeTables += name
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      var builds = 0
-      def build(): Unit = Warehouse.ensureVia(spark, name, Some(src.toString)) {
-        builds += 1
-        spark.read.parquet(new java.io.File(src, "t.parquet").toString)
-          .write.saveAsTable(name)
-      }
-      build()
-      assert(builds === 1)
-      dropKeepingFiles(name)
-      val tblDir = new java.io.File(warehouseDir, name.toLowerCase)
-      val metaF = new java.io.File(tblDir, "_graft_meta")
-      val metaAside = new java.io.File(tblDir.getParentFile, name.toLowerCase + "__meta_aside")
-      java.nio.file.Files.move(metaF.toPath, metaAside.toPath)
-      // simulate a LIVE foreign JVM: its lock carries its token and its
-      // heartbeat keeps the mtime fresh on a 200ms tick
-      val lock = new java.io.File(warehouseDir, name.toLowerCase + "._graft_lock")
-      java.nio.file.Files.write(lock.toPath, "foreign-jvm-token".getBytes("UTF-8"))
-      @volatile var ticking = true
-      val ticker = new Thread(() => {
-        while (ticking) { lock.setLastModified(System.currentTimeMillis()); Thread.sleep(200) }
-      })
-      ticker.setDaemon(true)
-      ticker.start()
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
+    val holder = fork("hold", lockPath(name))
+    try {
+      assert(status(holder) === "HELD")
+      val dataFiles = tblDir.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(dataFiles.nonEmpty)
       val waiter = Future(build())
-      Thread.sleep(2000) // 2.5x the stale age
-      assert(!waiter.isCompleted, "ensure must keep waiting on a live (heartbeating) foreign lock")
-      assert(new String(java.nio.file.Files.readAllBytes(lock.toPath), "UTF-8")
-        === "foreign-jvm-token", "the live foreign lock was stolen/replaced")
-      // the foreign holder finishes: marker published, lock released
-      ticking = false
-      ticker.join()
+      Thread.sleep(800)
+      assert(!waiter.isCompleted, "ensure must wait on the holder's lock")
+      assert(dataFiles.forall(_.exists()),
+        "a waiting ensure deleted the lock holder's mid-build files")
+      // the holder finishes: marker published, lock released
       java.nio.file.Files.move(metaAside.toPath, metaF.toPath)
-      assert(lock.delete())
+      holder.getOutputStream.close()
+      assert(holder.waitFor(60, TimeUnit.SECONDS))
       Await.result(waiter, 30.seconds)
-      assert(builds === 1, "the waiter must adopt the foreign holder's files, not rebuild")
+      assert(builds === 1, "the waiter must adopt the holder's published files, not rebuild")
       assert(spark.table(name).count() === 3)
-    }
+    } finally stop(holder)
   }
 
-  test("a steal victim neither deletes the stealer's lock nor publishes a marker") {
-    val src = freshSrcDir("victim")
-    val name = Warehouse.tableName("graft_spec_reuse_v", src.toString)
+  test("a forked holder JVM killed mid-build releases the lock at once") {
+    val src = freshSrcDir("killed")
+    val name = Warehouse.tableName("graft_spec_reuse_k", src.toString)
     madeTables += name
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    val lock = new java.io.File(warehouseDir, name.toLowerCase + "._graft_lock")
+    val holder = fork("hold", lockPath(name))
+    try {
+      assert(status(holder) === "HELD")
+      // the holder's torn output: a data file and no marker
+      val tblDir = new java.io.File(warehouseDir, name.toLowerCase)
+      tblDir.mkdirs()
+      java.nio.file.Files.writeString(
+        new java.io.File(tblDir, "part-00000-torn.parquet").toPath, "torn")
+      @volatile var buildStart = 0L
+      var builds = 0
+      val waiter = Future(Warehouse.ensureVia(spark, name, Some(src.toString)) {
+        buildStart = System.nanoTime()
+        builds += 1
+        spark.read.parquet(new java.io.File(src, "t.parquet").toString)
+          .write.saveAsTable(name)
+      })
+      Thread.sleep(800)
+      assert(!waiter.isCompleted && builds === 0, "ensure must wait on the live holder's lock")
+      val killedAt = System.nanoTime()
+      holder.destroyForcibly()
+      Await.result(waiter, 60.seconds)
+      assert(builds === 1)
+      val waitedMs = (buildStart - killedAt) / 1e6
+      assert(waitedMs < 2000, s"the build started ${waitedMs}ms after the holder died")
+      assert(spark.table(name).count() === 3, "the killed holder's torn file survived the build")
+    } finally stop(holder)
+  }
+
+  test("a slow in-JVM build holds the lock until done (forked probe)") {
+    val src = freshSrcDir("slow")
+    val name = Warehouse.tableName("graft_spec_reuse_slow", src.toString)
+    madeTables += name
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    val started = new CountDownLatch(1)
+    val finish = new CountDownLatch(1)
     var builds = 0
-    Warehouse.ensureVia(spark, name, Some(src.toString)) {
+    val holder = Future(Warehouse.ensureVia(spark, name, Some(src.toString)) {
       builds += 1
-      // simulate the pathological case the heartbeat can't cover (a JVM
-      // pause past the FULL stale age): mid-build, a stealer has renamed
-      // our lock away and created its own
-      java.nio.file.Files.write(lock.toPath, "stealer-token".getBytes("UTF-8"))
+      started.countDown()
+      finish.await(60, TimeUnit.SECONDS) // as slow as the probe needs
       spark.read.parquet(new java.io.File(src, "t.parquet").toString)
         .write.saveAsTable(name)
-    }
+    })
+    try {
+      assert(started.await(60, TimeUnit.SECONDS))
+      assert(probe(lockPath(name)) === "BLOCKED", "another JVM took the lock mid-build")
+    } finally finish.countDown()
+    Await.result(holder, 60.seconds)
     assert(builds === 1)
-    assert(lock.exists(), "the victim deleted the STEALER's lock")
-    assert(new String(java.nio.file.Files.readAllBytes(lock.toPath), "UTF-8")
-      === "stealer-token")
-    val metaF = new java.io.File(new java.io.File(warehouseDir, name.toLowerCase), "_graft_meta")
-    assert(!metaF.exists(),
-      "the victim published a marker over a directory it no longer owns")
-    assert(lock.delete())
+    assert(probe(lockPath(name)) === "ACQUIRED", "the lock outlived the build")
+    assert(spark.table(name).count() === 3)
+  }
+
+  test("a nested lock on the same name fails loudly; the outer stays held") {
+    val name = "graft_spec_nested_lock"
+    madeTables += name
+    val outer = Future(Warehouse.withTableLock(spark, name) {
+      val ex = intercept[IllegalStateException](Warehouse.withTableLock(spark, name)(()))
+      (ex.getMessage, probe(lockPath(name)))
+    })
+    val (msg, probed) = Await.result(outer, 60.seconds)
+    assert(msg.contains(name + "._graft_lock") && msg.contains("already held"), msg)
+    assert(probed === "BLOCKED", "the failed nested attempt released the outer lock")
+    assert(probe(lockPath(name)) === "ACQUIRED")
   }
 
   test("source rewritten under a LIVE JVM invalidates the registered artifact (exists-path revalidation)") {
@@ -407,5 +378,26 @@ class WarehouseSpec extends SparkSpec {
     build(Some(src.toString))
     assert(builds === 2)
     assert(spark.table(name).count() === 3)
+  }
+}
+
+/** The foreign JVM of the build-lock cases: `hold <lock>` takes the lock,
+  * prints HELD and keeps it until stdin closes (or the process is
+  * killed); `probe <lock>` makes one attempt and prints BLOCKED or
+  * ACQUIRED. */
+object WarehouseLockFork {
+  def main(args: Array[String]): Unit = {
+    val lock = new java.io.File(args(1))
+    val word = args(0) match {
+      case "hold" => Warehouse.withFileLock(lock, () => None) {
+        println("HELD")
+        System.out.flush()
+        while (System.in.read() != -1) {}
+        "RELEASED"
+      }
+      case "probe" => Warehouse.withFileLock(lock, () => Some("BLOCKED"))("ACQUIRED")
+    }
+    println(word)
+    System.out.flush()
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 /** The streaming MV sink's contract: micro-batched fact rows fold into

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The shared snapshot-commit module's retention/time-travel contract:
   * `retain` bounds on-disk snapshots, [[VersionedTable.versionAt]] reads
