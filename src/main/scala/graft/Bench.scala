@@ -2,7 +2,6 @@ package graft
 
 import java.util.Locale
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -27,9 +26,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - per-pass times are emitted under "attempts" so a stall is
   *     diagnosable from the driver's JSON alone (it shows up as one
   *     inflated column, not an inflated query);
-  *   - `spark.catalog.clearCache()` between queries drops any `.cache()`
-  *     a query marked (Dedup's shingle/doc caches), so no query times
-  *     another query's leaked cache memory pressure;
+  *   - [[GraftSession.reset]] between queries drops any `.cache()` a
+  *     query marked (Dedup's shingle/doc caches) and any leftover
+  *     checkpoint blocks, so no query times another query's leaked cache
+  *     memory pressure;
   *   - all numbers are formatted under Locale.ROOT — a comma-decimal
   *     default locale must not break the machine-parsed JSON line.
   */
@@ -128,26 +128,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosAsLong, "true")
-      // ~240 queries × several codegen units far exceed the default
-      // 100-entry generated-class cache: constant eviction forces a Janino
-      // recompile of every heavy expression tree on EVERY attempt, which
-      // measured as a 5-10× inflation of the late-run queries. Static conf,
-      // so it must be set before the session exists. Raised 5000 → 24000 in
-      // r15: the 243-query × 3-pass working set crossed 5000 generated
-      // classes and pass 3 ran 2.9× pass 2 (see pass_diag below — the
-      // per-pass recompile count is now self-evidencing on the diagnostics
-      // line). Cache entries are weak-ref'd class holders; 24k of them is
-      // tens of MB against a 24g heap.
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.installOptimizations(spark)
+    val spark = GraftSession.start(s"local[$cpus]")
     // Capture QueryExecutions so shuffle-byte metrics can be read after the
     // run. Some queries run intermediate driver actions inside q.run (a
     // temp-sink write, a centroid collect) — each fires its own listener
@@ -199,7 +180,7 @@ object Bench {
             graft.functions.NativeExprs.wordShingles(col("text"), 3)).as("sh"))
         .groupBy("sh").count()
         .write.format("noop").mode("overwrite").save()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      GraftSession.reset(spark)
     }
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val headline = SparkEntry.headline
@@ -262,14 +243,8 @@ object Bench {
           errors(q.name) = e.toString.take(300)
           drainBuilds() // a build that preceded the failure is still one-off cost
       }
-      // drop caches a query marked, so the next query starts clean
-      spark.catalog.clearCache()
-      // also drop RDD-level leftovers clearCache cannot see: fixpoint
-      // queries localCheckpoint() their final state, and those blocks
-      // otherwise stay pinned until a GC the 24g heap rarely runs —
-      // 729 executions of leftovers competing with later queries'
-      // execution memory. Outside the timed region, like clearCache.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // so the next query starts clean; outside the timed region
+      GraftSession.reset(spark)
     }
     probes += loadProbe(cpus.toInt)
     passSnaps += passSnap
@@ -392,7 +367,7 @@ object Bench {
           .mkString("{", ",", "}")},"load_probes_1_vs_n":$probesJson,"probe_threads":${cpus.toInt},"host_cpus":${Runtime
           .getRuntime.availableProcessors()},"pass_diag":$passDiag,"build_sec":$buildsJson,"min_median":$stats}""")
     println(kept)
-    spark.stop()
+    GraftSession.stop(spark)
     if (errors.nonEmpty) sys.exit(1)
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosAsLong, "true")
-      // the 60-query dump blows the default 100-entry generated-class
-      // cache (see Bench.scala — eviction forces Janino recompiles)
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.installOptimizations(spark)
+    val spark = GraftSession.start(s"local[$cpus]")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -38,16 +26,12 @@ object Verify {
           dir.delete()
         }
       }
-      // drop any caches the query marked (Dedup shingle/doc caches) so
-      // they can't accumulate across the 50+ query dump — plus the
-      // RDD-level localCheckpoint leftovers of fixpoint queries, which
-      // the catalog cache API cannot see (same hygiene as Bench)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // so query-marked caches can't accumulate across the dump
+      GraftSession.reset(spark)
     }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${Bench.jstr(k)}: ${Bench.jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    GraftSession.stop(spark)
   }
 }

@@ -791,7 +791,7 @@ object Analytics {
       .agg(count(lit(1)).as("dg"))
       .select(col("ia").as("node"), col("dg"))
       .withColumn("dead", col("dg") < KcoreK)
-    // fixpointObservedConverged (not plain fixpoint): k-core membership
+    // requireConverged on an observed fixpoint: k-core membership
     // is correctness-bearing (a capped mid-peel state would emit
     // dead-flagged rows with core_deg < k as core members, and the
     // rescan twin would disagree), and the dead-count probe is a pure
@@ -800,7 +800,7 @@ object Analytics {
     // paid a second scan-the-checkpoint job for the count). Measured
     // peel depth on the real graph is ≤ 6 vs a cap of 16, so the raise
     // is a tripwire, never the expected path.
-    val fp = Iterate.fixpointObservedConverged(state0, KcoreMaxRounds) { (state, _) =>
+    val fp = Iterate.fixpointObservedBy(state0, KcoreMaxRounds) { (state, _) =>
       val delta = state.filter(col("dead")).select(col("node").as("nb"))
       val dec = edges
         .join(delta, col("ib") === col("nb"))
@@ -811,7 +811,7 @@ object Analytics {
         .join(dec, col("node") === col("ia"), "left")
         .select(col("node"), (col("dg") - coalesce(col("dc"), lit(0L))).as("dg"))
         .withColumn("dead", col("dg") < KcoreK)
-    } (sum(when(col("dead"), 1L).otherwise(0L)))
+    } (Seq(sum(when(col("dead"), 1L).otherwise(0L))))(Iterate.noneLeft).requireConverged
     fp.state
       .select(col("node"), col("dg").as("core_deg"))
       .orderBy("node")
@@ -827,7 +827,7 @@ object Analytics {
       .localCheckpoint()
     val cur0 = edges.select(col("ia").as("node")).distinct()
     var prevCount = -1L
-    val cur = Iterate.fixpointConverged(cur0, KcoreMaxRounds) { (curr, _) =>
+    val cur = Iterate.fixpoint(cur0, KcoreMaxRounds) { (curr, _) =>
       edges
         .join(curr, col("ia") === col("node"), "leftsemi")
         .join(curr.select(col("node").as("nb")), col("ib") === col("nb"), "leftsemi")
@@ -840,7 +840,7 @@ object Analytics {
       val n = next.count()
       prevCount = n
       p - n
-    }.state
+    }.requireConverged.state
     val core = edges
       .join(cur, col("ia") === col("node"), "leftsemi")
       .join(cur.select(col("node").as("nb")), col("ib") === col("nb"), "leftsemi")

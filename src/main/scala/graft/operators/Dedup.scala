@@ -757,7 +757,7 @@ object Dedup {
   /** Backstop only — min-label needs O(component diameter) rounds and
     * near-dup components are diameter ~2; a graph that legitimately
     * needs more than this belongs on [[ccLabelsStarFrom]]. Both CC
-    * variants run through `fixpointConverged`, which RAISES if this cap
+    * variants call `Fixpoint.requireConverged`, which RAISES if this cap
     * ever cuts the loop mid-flight: labels decide what gets dropped, and
     * a half-propagated label set would split components and mis-dedup
     * with no symptom (the DuckDB oracles recurse to true convergence, so
@@ -850,7 +850,7 @@ object Dedup {
     // least(...)), so Σ label strictly drops iff ANY label changed —
     // equality of sums ⟺ fixpoint, exactly. The (count, Σlabel) pair is
     // OBSERVED during each round's checkpoint materialization
-    // (fixpointObservedConvergedBy), so a round pays exactly one job —
+    // (fixpointObservedBy), so a round pays exactly one job —
     // no separate probe scan, no memoized-previous bookkeeping
     // (decimal(38) keeps the sum exact at any corpus size).
     def sumOf(x: Seq[Any]): java.math.BigDecimal = {
@@ -868,7 +868,7 @@ object Dedup {
           "CC convergence probe: label sum overflowed decimal(38,0)")
       else v
     }
-    Iterate.fixpointObservedConvergedBy(labels0, CcMaxRounds) { (labels, _) =>
+    Iterate.fixpointObservedBy(labels0, CcMaxRounds) { (labels, _) =>
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
@@ -878,7 +878,7 @@ object Dedup {
         .select(col("id"), least(col("label"), coalesce(col("nb_min"), col("label"))).as("label"))
     } (Seq(count(lit(1)), sum(col("label").cast("decimal(38,0)")))) { (prev, next) =>
       sumOf(prev).compareTo(sumOf(next)) == 0
-    }.state
+    }.requireConverged.state
   }
 
   /** Alternating LARGE-STAR / SMALL-STAR connected components (Kiveris
@@ -904,7 +904,7 @@ object Dedup {
     * fewer rounds. The fixpoint test compares an order-independent
     * STATE-SUMMARY pair — (edge count, Σ xxhash64(a,b) as decimal) —
     * observed on each round's checkpoint materialization itself
-    * ([[Iterate.fixpointObservedConvergedBy]]), so a round pays exactly
+    * ([[Iterate.fixpointObservedBy]]), so a round pays exactly
     * ONE job; the previous per-round double-EXCEPT probe paid two extra
     * full-rescan jobs per round for an equality test the checksum pair
     * answers during the materialization. The edge set is canonical and
@@ -919,7 +919,7 @@ object Dedup {
       e.select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
         .distinct()
     val edges0 = canon(pairs.toDF("a", "b").filter(col("a") =!= col("b")))
-    val fp = Iterate.fixpointObservedConvergedBy(edges0, CcMaxRounds) { (edges, _) =>
+    val fp = Iterate.fixpointObservedBy(edges0, CcMaxRounds) { (edges, _) =>
       // large-star over the bidirectional neighborhood view
       val bidir = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
         .toDF("u", "v")
@@ -958,7 +958,7 @@ object Dedup {
         (cnt, sum)
       }
       norm(prev) == norm(next)
-    }
+    }.requireConverged
     val (edges, rounds) = (fp.state, fp.rounds)
     // converged stars, canonicalized (a = least): a is the component
     // minimum on every edge

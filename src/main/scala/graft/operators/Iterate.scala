@@ -19,10 +19,10 @@ import org.apache.spark.sql.DataFrame
   *   - `maxRounds` is a BACKSTOP for schedule-shaped callers (a fixed
   *     merge-round budget) and a tripwire for convergence-shaped ones:
   *     correctness-bearing fixpoints (CC labels deciding what gets
-  *     DROPPED, ranks, peeling) must go through [[fixpointConverged]],
-  *     which RAISES when the cap cuts the loop mid-flight — silently
-  *     returning half-propagated labels would split components and
-  *     mis-dedup without any symptom.
+  *     DROPPED, ranks, peeling) must call [[Fixpoint.requireConverged]]
+  *     on the result, which RAISES when the cap cut the loop mid-flight —
+  *     silently returning half-propagated labels would split components
+  *     and mis-dedup without any symptom.
   */
 private[operators] object Iterate {
 
@@ -49,7 +49,20 @@ private[operators] object Iterate {
     * (star-contraction logarithmic rounds, convergence-stopped ranks).
     * `converged` is false iff the cap fired while progress was still
     * being made. */
-  final case class Fixpoint(state: DataFrame, rounds: Int, converged: Boolean)
+  final case class Fixpoint(state: DataFrame, rounds: Int, converged: Boolean) {
+
+    /** This fixpoint, for convergence-shaped callers: raises if the round
+      * cap fired before the probe said done, instead of handing back a
+      * state the algorithm itself says is not final. */
+    def requireConverged: Fixpoint = {
+      if (!converged)
+        throw new IllegalStateException(
+          s"fixpoint still progressing after $rounds rounds — raise the " +
+            "backstop or inspect the input (returning the capped state " +
+            "would be silently wrong)")
+      this
+    }
+  }
 
   /** Drive `state0` through `step(state, roundIndex)` (0-based index)
     * until `progress(prev, next) == 0` or `maxRounds` executed. */
@@ -69,97 +82,31 @@ private[operators] object Iterate {
     Fixpoint(state, rounds, converged = !more)
   }
 
-  /** [[fixpoint]] for convergence-shaped callers: raises if the round
-    * cap fired before the probe reached 0, instead of handing back a
-    * state the algorithm itself says is not final. */
-  def fixpointConverged(state0: DataFrame, maxRounds: Int)(
-      step: (DataFrame, Int) => DataFrame)(
-      progress: (DataFrame, DataFrame) => Long): Fixpoint = {
-    val fp = fixpoint(state0, maxRounds)(step)(progress)
-    raiseIfCapped(fp, maxRounds)
-    fp
-  }
-
-  private def raiseIfCapped(fp: Fixpoint, maxRounds: Int): Unit =
-    if (!fp.converged)
-      throw new IllegalStateException(
-        s"fixpoint still progressing after $maxRounds rounds — raise the " +
-          "backstop or inspect the input (returning the capped state " +
-          "would be silently wrong)")
-
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
-  /** [[fixpointConverged]] with the progress probe FOLDED INTO the
-    * checkpoint materialization: `metric` is a count-shaped AGGREGATE
-    * column evaluated over each round's OUTPUT rows during the eager
-    * `localCheckpoint()` job itself (Spark's Observation/CollectMetrics
-    * machinery — the metric rides the plan, every row is observed
-    * exactly once by the materializing action, and the value is
-    * available the moment the checkpoint returns). A round therefore
-    * pays exactly ONE job; the two-argument probe shape pays a second
-    * launch-a-job-and-rescan-the-checkpoint pass per round. Fits any
-    * fixpoint whose progress is a function of the new state alone
-    * (peeling's "nodes that just died"); probes comparing prev vs next
-    * stay on [[fixpointConverged]]. */
-  def fixpointObservedConverged(state0: DataFrame, maxRounds: Int)(
-      step: (DataFrame, Int) => DataFrame)(
-      metric: org.apache.spark.sql.Column): Fixpoint = {
-    val fp = fixpointObserved(state0, maxRounds)(step)(metric)
-    raiseIfCapped(fp, maxRounds)
-    fp
-  }
+  /** A count-shaped single-metric probe for [[fixpointObservedBy]]:
+    * done once the new state's value is no longer positive. A NULL (a sum
+    * over an empty state) reads as 0, i.e. converged. */
+  val noneLeft: (Seq[Any], Seq[Any]) => Boolean = (_, next) =>
+    next.head == null || next.head.asInstanceOf[Number].longValue <= 0
 
-  /** [[fixpointObservedConverged]] WITHOUT the cap tripwire — for loops
-    * whose round cap is part of the operator's semantics (a bounded
-    * depth, a fixed budget) rather than a convergence backstop, but
-    * whose progress probe is still a pure aggregate of the new state
-    * (so it rides the checkpoint job: one job per round where the
-    * two-argument [[fixpoint]] probe pays a second scan). */
-  def fixpointObserved(state0: DataFrame, maxRounds: Int)(
-      step: (DataFrame, Int) => DataFrame)(
-      metric: org.apache.spark.sql.Column): Fixpoint = {
-    var state = state0.localCheckpoint()
-    var rounds = 0
-    var more = true
-    while (more && rounds < maxRounds) {
-      val obs = org.apache.spark.sql.Observation(
-        s"graft_fixpoint_${obsId.incrementAndGet()}")
-      val next = step(state, rounds)
-        .observe(obs, metric.as("progress"))
-        .localCheckpoint()
-      rounds += 1
-      // the eager checkpoint above IS the observed action, so the metric
-      // is already delivered — this does not block
-      more = Option(obs.get("progress"))
-        .map(_.asInstanceOf[Number].longValue).getOrElse(0L) > 0
-      dropCheckpoint(state) // superseded: next is materialized
-      state = next
-    }
-    Fixpoint(state, rounds, converged = !more)
-  }
-
-  /** [[fixpointObservedConverged]] for STATE-SUMMARY probes: callers
-    * whose convergence test compares an aggregate of the new state
-    * against the same aggregate of the previous state (sssp's
-    * (count, Σdist), CC's label sum). `metrics` ride each checkpoint
-    * materialization — including the SEED's, replacing the memoize-the-
-    * previous-round trick — so a round still pays exactly one job;
+  /** [[fixpoint]] with the progress probe FOLDED INTO the checkpoint
+    * materialization: `metrics` are AGGREGATE columns evaluated over each
+    * state's rows during the eager `localCheckpoint()` job itself
+    * (Spark's Observation/CollectMetrics machinery — the metrics ride the
+    * plan, every row is observed exactly once by the materializing
+    * action, and the values are available the moment the checkpoint
+    * returns). The seed's checkpoint is observed too, so a round pays
+    * exactly ONE job where the two-argument probe of [[fixpoint]] pays a
+    * second launch-a-job-and-rescan-the-checkpoint pass.
+    *
     * `same(prev, next)` sees the two observed value sequences (metric
-    * order preserved) and may throw to surface probe-integrity
-    * violations (e.g. a decimal overflow turning a sum NULL). */
-  def fixpointObservedConvergedBy(state0: DataFrame, maxRounds: Int)(
-      step: (DataFrame, Int) => DataFrame)(
-      metrics: Seq[org.apache.spark.sql.Column])(
-      same: (Seq[Any], Seq[Any]) => Boolean): Fixpoint = {
-    val fp = fixpointObservedBy(state0, maxRounds)(step)(metrics)(same)
-    raiseIfCapped(fp, maxRounds)
-    fp
-  }
-
-  /** [[fixpointObservedConvergedBy]] WITHOUT the cap tripwire — the
-    * state-summary-probe twin of [[fixpointObserved]], for semantically
-    * capped loops (e.g. a depth-bounded BFS, where stopping at the cap
-    * while still expanding is the operator's defined output). */
+    * order preserved) and returns true once converged: a state-summary
+    * comparison (sssp's (count, Σdist), CC's label sum), or [[noneLeft]]
+    * for a count of what the new state still has to do (peeling's "nodes
+    * that just died", PageRank's unsettled ranks). It may throw to
+    * surface probe-integrity violations (e.g. a decimal overflow turning
+    * a sum NULL). */
   def fixpointObservedBy(state0: DataFrame, maxRounds: Int)(
       step: (DataFrame, Int) => DataFrame)(
       metrics: Seq[org.apache.spark.sql.Column])(

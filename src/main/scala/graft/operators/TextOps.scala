@@ -1930,7 +1930,8 @@ object TextOps {
       .union(und.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
-    val r0 = deg.select(col("src").as("node"), lit(1000000L).as("r"))
+    // prev_r only so the probe below can observe the seed too (0 moved)
+    val r0 = deg.select(col("src").as("node"), lit(1000000L).as("r"), lit(1000000L).as("prev_r"))
     // the convergence probe (count of nodes that moved > PrTolMicro) is
     // folded INTO each round's state: the step's output joins the
     // incoming ranks back on (the same inner join the old two-argument
@@ -1941,10 +1942,11 @@ object TextOps {
     // The inner join cannot change the state's node set: edges are the
     // symmetric doubled und, so every round's prStep output is exactly
     // the full node set of round 0 — the join only annotates.
-    Iterate.fixpointObserved(r0, PrMaxIters) { (r, _) =>
+    Iterate.fixpointObservedBy(r0, PrMaxIters) { (r, _) =>
       prStep(edges, deg, r)
         .join(r.select(col("node"), col("r").as("prev_r")), "node")
-    } (sum(when(abs(col("r") - col("prev_r")) > PrTolMicro, 1L).otherwise(0L)))
+    } (Seq(sum(when(abs(col("r") - col("prev_r")) > PrTolMicro, 1L).otherwise(0L))))(
+      Iterate.noneLeft)
       .state.select("node", "r").orderBy(col("r").desc, col("node"))
   }
 
@@ -2239,7 +2241,7 @@ object TextOps {
 
   /** Synchronous-relaxation round cap. The word graph's weighted
     * diameter is a handful of hops; 64 is a tripwire, not a schedule —
-    * [[Iterate.fixpointConverged]] raises if it ever binds. */
+    * [[Iterate.Fixpoint.requireConverged]] raises if it ever binds. */
   private[operators] val SsspMaxRounds = 64
 
   /** WEIGHTED single-source shortest paths over the word-adjacency
@@ -2280,7 +2282,7 @@ object TextOps {
   private[operators] def ssspFrom(edges: DataFrame, seed: DataFrame): DataFrame = {
     // convergence = (reached-node count, Σ dmin) both unchanged; the pair
     // is OBSERVED during each round's checkpoint materialization
-    // (fixpointObservedConvergedBy), so a round pays one job — no
+    // (fixpointObservedBy), so a round pays one job — no
     // separate probe scan. A null sum over a nonempty frame is a
     // decimal(38) overflow and must fail loudly, never read as
     // converged (cf. ccLabelsFrom's probe).
@@ -2293,7 +2295,7 @@ object TextOps {
           "SSSP convergence probe: distance sum overflowed decimal(38,0)")
       else (c, s)
     }
-    Iterate.fixpointObservedConvergedBy(seed, SsspMaxRounds) { (dist, _) =>
+    Iterate.fixpointObservedBy(seed, SsspMaxRounds) { (dist, _) =>
       val relaxed = edges
         .join(dist, col("src") === col("node"))
         .select(col("dst").as("n"), (col("dmin") + col("w")).as("cand"))
@@ -2307,7 +2309,7 @@ object TextOps {
       val p = stats(prev)
       val n = stats(next)
       p._1 == n._1 && p._2.compareTo(n._2) == 0
-    }.state
+    }.requireConverged.state
   }
 
   /** Fixed synchronous LPA schedule — label propagation is a

@@ -40,7 +40,7 @@ object Warehouse {
   def tableName(prefix: String, dir: String): String =
     prefix + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")
 
-  private[sources] def rm(f: java.io.File): Unit = {
+  private[graft] def rm(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(rm)
     f.delete()
   }
@@ -260,7 +260,7 @@ object Warehouse {
   /** Per-table in-JVM monitors: two threads ensuring the SAME table
     * serialize, while an ensure blocked on another JVM's file lock must
     * not stall unrelated tables (a streaming sink's per-micro-batch
-    * writeVersion would otherwise queue behind a foreign JVM's index
+    * commit lock would otherwise queue behind a foreign JVM's index
     * build for the full poll wait). */
   private val nameMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()

@@ -65,15 +65,17 @@ object VersionedTable {
     * `v<batchId>` — no marker, no retire. Public to the specs so the
     * crash window between the version write and the marker append is
     * directly exercisable. A crashed earlier attempt may have left this
-    * version (no marker): same committed base + same batch rows =
-    * identical content, so drop-and-rewrite is the idempotent thing. */
+    * version (no marker), registered or as bare files: same committed
+    * base + same batch rows = identical content, so drop-and-rewrite is
+    * the idempotent thing. Takes no lock of its own: the caller holds
+    * the marker-table lock ([[applyBatch]]), which already serializes
+    * every writer of `table`. */
   private[streaming] def writeVersion(
       s: SparkSession, table: String, batchId: Long, content: DataFrame): Unit = {
     val vName = versionName(table, batchId)
     s.sql(s"DROP TABLE IF EXISTS $vName")
-    graft.sources.Warehouse.ensureVia(s, vName) {
-      content.write.mode(SaveMode.Overwrite).saveAsTable(vName)
-    }
+    graft.sources.Warehouse.rm(graft.sources.Warehouse.managedTableDir(s, vName))
+    content.write.mode(SaveMode.Overwrite).saveAsTable(vName)
   }
 
   /** All committed batch ids, ascending (empty when none) — the marker

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry}
 
 /** Multi-JVM execution gate — every other gate row and bench in this repo
   * runs `local[*]` (one JVM, no serialization boundary), which leaves the
@@ -79,17 +78,17 @@ object ClusterProbe {
     // warehouse store, then stored-table broadcast against a corpus scan
     "q_unigram_fertility")
 
-  // JDK17 module opens executors need when not launched via spark-submit
-  // (mirrors build.sbt's jdk17AddOpens / JavaModuleOptions.defaultModuleOptions)
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
+  /** Confs every probe session adds to [[GraftSession.start]]: forked
+    * executor JVMs need the JDK module opens (they are not launched via
+    * spark-submit) and the application classes — the worker forks them
+    * with only the distribution's jars on the classpath, so this repo's
+    * classes are shipped explicitly, exactly as a real cluster run ships
+    * the application jar via spark-submit. */
+  private def executorConf(appName: String): Seq[(String, String)] = Seq(
+    "spark.app.name" -> appName,
+    "spark.executor.memory" -> "1g",
+    "spark.executor.extraJavaOptions" -> GraftSession.addOpens.mkString(" "),
+    "spark.executor.extraClassPath" -> System.getProperty("java.class.path"))
 
   /** Row count above which a query's compare surface becomes one md5
     * digest line (see the large-output guard in [[runQueries]]). At
@@ -114,29 +113,10 @@ object ClusterProbe {
     * [[ClusterSweep]] (the FULL gate, once per round). */
   def runQueries(master: String, sfDir: String, warehouse: String,
       names: Seq[String]): Map[String, Seq[String]] = {
-    val b = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-probe")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.default.parallelism", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config(Tables.NanosAsLong, "true")
-      // static conf: a 255-query sweep session blows the default
-      // 100-entry generated-class cache (see Verify/Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "24000")
-      .config("spark.executor.memory", "1g")
-      .config("spark.executor.extraJavaOptions", addOpens)
-      // executor JVMs are forked by the worker with only the
-      // distribution's jars on the classpath — the application classes
-      // (this repo) must be shipped explicitly, exactly as a real
-      // cluster run ships the application jar via spark-submit
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-    val spark = b.getOrCreate()
+    val spark = GraftSession.start(master, executorConf("graft-cluster-probe") ++ Seq(
+      "spark.default.parallelism" -> "8",
+      "spark.sql.warehouse.dir" -> warehouse): _*)
     try {
-      spark.sparkContext.setLogLevel("ERROR")
-      graft.functions.GraftFunctions.installOptimizations(spark)
       names.map { name =>
         // NonFatal only: a fatal JVM error (OOM, LinkageError) must kill
         // the sweep fast, not limp through the remaining ~240 queries as
@@ -155,17 +135,11 @@ object ClusterProbe {
           } catch { case scala.util.control.NonFatal(e) =>
             Seq(s"!ERROR: ${e.getClass.getSimpleName}: ${e.getMessage}")
           }
-        // drop query-marked caches (Dedup shingle/doc frames) so they
-        // can't accumulate across a 255-query sweep session
-        spark.catalog.clearCache()
+        // so query-marked caches can't accumulate across a sweep session
+        GraftSession.reset(spark)
         name -> rows
       }.toMap
-    } finally {
-      spark.stop()
-      // allow a fresh context afterwards
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+    } finally GraftSession.stop(spark)
   }
 
   /** Streaming across the JVM boundary: a KV→KV AvailableNow loop (the
@@ -179,18 +153,8 @@ object ClusterProbe {
     (0 until 24).foreach { i =>
       java.nio.file.Files.writeString(src.resolve(f"part-$i%03d"), f"k$i%03d v$i\n")
     }
-    val b = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-probe-stream")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.memory", "1g")
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-    val spark = b.getOrCreate()
+    val spark = GraftSession.start(master, executorConf("graft-cluster-probe-stream"): _*)
     try {
-      spark.sparkContext.setLogLevel("ERROR")
       import org.apache.spark.sql.functions._
       val q = spark.readStream.format("graft-kv")
         .option("maxFilesPerTrigger", "7")
@@ -219,11 +183,7 @@ object ClusterProbe {
       (spark.read.format("graft-kv").load(out.toString)
         .collect().map(r => r.getString(0) + " " + r.getString(1)).sorted.toSeq
         ++ state)
-    } finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+    } finally GraftSession.stop(spark)
   }
 
   /** Standalone-run ergonomics, shared with [[ClusterSweep]]: default

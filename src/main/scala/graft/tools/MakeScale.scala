@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scratch scale-up generator (not part of the driver contract): builds
@@ -30,14 +30,7 @@ object MakeScale {
     val dst = args(1)
     val reps = if (args.length > 2) args(2).toInt else 10
     val salt = args.length > 3 && args(3) == "salt"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.Tables.NanosAsLong, "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.start("local[8]")
 
     def rep(t: String)(offset: (DataFrame, org.apache.spark.sql.Column) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$t.parquet")
@@ -69,6 +62,6 @@ object MakeScale {
       .withColumn("event_id", col("event_id") + o)
       .withColumn("user_id", col("user_id") + o))
     Seq("region", "nation", "customer", "supplier", "part").foreach(copy)
-    spark.stop()
+    graft.GraftSession.stop(spark)
   }
 }

@@ -21,13 +21,9 @@ import org.apache.spark.sql.functions._
 object SkewAb {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 20000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.start(
+      s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]",
+      "spark.sql.shuffle.partitions" -> "8")
 
     // materialized inputs (localCheckpoint) so the timed body is the JOIN,
     // not the parallel-friendly data generation
@@ -102,6 +98,6 @@ object SkewAb {
       graft.operators.Skew.autoSalt(lD, rD, lD("k"), rD("k"), audit, "planted.hot").count()
     }
 
-    spark.stop()
+    graft.GraftSession.stop(spark)
   }
 }

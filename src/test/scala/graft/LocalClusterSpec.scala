@@ -24,17 +24,8 @@ class LocalClusterSpec extends AnyFunSuite {
     import scala.sys.process._
     val javaBin = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val rt = java.nio.file.Files.createTempDirectory("graft-probe-rt-").toString
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
+    val cmd = Seq(javaBin) ++ GraftSession.addOpens ++ Seq(
       "-Xmx4g",
       "-Dspark.ui.enabled=false",
       "-Dspark.sql.session.timeZone=UTC",

@@ -4,23 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. One session per suite; small
-  * shuffle-partition count so tiny fixtures don't schedule 200 tasks. */
+/** Shared local SparkSession for specs, built by [[GraftSession]] like
+  * every main's: 4 cores, so 4 shuffle partitions — tiny fixtures don't
+  * schedule 200 tasks. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4, 4]") // 4 threads, maxFailures=4 → retry semantics testable
-      .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosAsLong, "true")
-      .getOrCreate()
-    // specs run with the same optimizer surface the mains install
-    graft.functions.GraftFunctions.installOptimizations(s)
-    s
-  }
+  // maxFailures=4 → retry semantics testable
+  lazy val spark: SparkSession =
+    GraftSession.start("local[4, 4]", "spark.app.name" -> getClass.getSimpleName)
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM; don't stop it here.
@@ -30,19 +20,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def sfDir: String = "/root/testdata/sf0.001"
 
   /** Drop a versioned-snapshot table family (state, marker log, version
-    * snapshots) from the catalog AND the warehouse dir — shared by every
-    * VersionedTable-consumer spec so a previous run's files can't leak
-    * into this one. */
+    * snapshots) from the catalog AND the warehouse dir, lock files
+    * included — shared by every VersionedTable-consumer spec so a
+    * previous run's files can't leak into this one. */
   def freshVersionedTables(name: String, maxVersion: Int = 40): Unit = {
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm)
       f.delete()
     }
+    val root = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
     for (t <- Seq(name, name + "_commits") ++ (0 to maxVersion).map(name + "_v" + _)) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      val dir = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
+      val dir = new java.io.File(root, t)
       if (dir.exists) rm(dir)
+      new java.io.File(root, t + "._graft_lock").delete()
     }
   }
 }

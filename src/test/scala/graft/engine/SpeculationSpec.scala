@@ -49,17 +49,12 @@ class SpeculationSpec extends AnyFunSuite {
 
   test("M1: straggler is flagged for speculation; committed output stays exactly-once") {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("SpeculationSpec")
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "50ms")
-      .config("spark.speculation.multiplier", "1.2")
-      .config("spark.speculation.quantile", "0.5")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.start("local[4]",
+      "spark.app.name" -> "SpeculationSpec",
+      "spark.speculation" -> "true",
+      "spark.speculation.interval" -> "50ms",
+      "spark.speculation.multiplier" -> "1.2",
+      "spark.speculation.quantile" -> "0.5")
     try {
       import spark.implicits._
       val flagged = new AtomicInteger(0)
@@ -101,8 +96,6 @@ class SpeculationSpec extends AnyFunSuite {
       val rows = spark.read.parquet(out).as[Long].collect().sorted
       assert(rows.length === n, s"expected exactly $n rows, got ${rows.length}")
       assert(rows.toSeq === (0L until n.toLong), "row set corrupted by speculation")
-    } finally {
-      spark.stop()
-    }
+    } finally graft.GraftSession.stop(spark)
   }
 }

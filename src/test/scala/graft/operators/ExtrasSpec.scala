@@ -2249,15 +2249,15 @@ class ExtrasSpec extends SparkSpec {
     // plain fixpoint reports the capped state honestly…
     val fp = Iterate.fixpoint(s0, 3)(step)((_, _) => 1L)
     assert(fp.rounds === 3 && !fp.converged)
-    // …but the convergence-shaped entry point refuses to return it —
+    // …but requireConverged refuses to return it —
     // CC labels decide what gets DROPPED, so a half-propagated state
     // must never flow onward silently
     intercept[IllegalStateException] {
-      Iterate.fixpointConverged(s0, 3)(step)((_, _) => 1L)
+      Iterate.fixpoint(s0, 3)(step)((_, _) => 1L).requireConverged
     }
     // and a loop that does converge passes through with converged=true
-    val ok = Iterate.fixpointConverged(s0, 3)(step)((_, next) =>
-      if (next.head().getLong(0) >= 2L) 0L else 1L)
+    val ok = Iterate.fixpoint(s0, 3)(step)((_, next) =>
+      if (next.head().getLong(0) >= 2L) 0L else 1L).requireConverged
     assert(ok.converged && ok.rounds === 2)
   }
 

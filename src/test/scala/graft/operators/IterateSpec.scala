@@ -16,7 +16,8 @@ class IterateSpec extends SparkSpec {
     val empty = Seq.empty[Long].toDF("x")
     // sum over zero rows is NULL — the probe must read it as 0/converged,
     // not throw or spin
-    val fp = Iterate.fixpointObservedConverged(empty, 5)((st, _) => st)(sum(col("x")))
+    val fp = Iterate.fixpointObservedBy(empty, 5)((st, _) => st)(Seq(sum(col("x"))))(
+      Iterate.noneLeft).requireConverged
     assert(fp.converged)
     assert(fp.rounds === 1)
     assert(fp.state.count() === 0)
@@ -29,10 +30,10 @@ class IterateSpec extends SparkSpec {
     // state (they die next round) — the k-core probe shape
     def step(st: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       st.filter(col("x") % 2 === 0).select((col("x") / 2).cast("long").as("x"))
-    val observed = Iterate.fixpointObservedConverged(seed, 20)((st, _) => step(st))(
-      count(when(col("x") % 2 =!= 0, 1)))
-    val classic = Iterate.fixpointConverged(seed, 20)((st, _) => step(st))(
-      (_, next) => next.filter(col("x") % 2 =!= 0).count())
+    val observed = Iterate.fixpointObservedBy(seed, 20)((st, _) => step(st))(
+      Seq(count(when(col("x") % 2 =!= 0, 1))))(Iterate.noneLeft).requireConverged
+    val classic = Iterate.fixpoint(seed, 20)((st, _) => step(st))(
+      (_, next) => next.filter(col("x") % 2 =!= 0).count()).requireConverged
     assert(observed.rounds === classic.rounds)
     assert(observed.rounds === 4) // {1..8} -> {1..4} -> {1,2} -> {1} -> {}
     assert(observed.state.collect().map(_.getLong(0)).sorted.toSeq ===
@@ -44,7 +45,7 @@ class IterateSpec extends SparkSpec {
     import spark.implicits._
     val seed = Seq(1L, 2L, 3L).toDF("x")
     var seen = List.empty[Seq[Any]]
-    val fp = Iterate.fixpointObservedConvergedBy(seed, 5)((st, _) => st)(
+    val fp = Iterate.fixpointObservedBy(seed, 5)((st, _) => st)(
       Seq(count(lit(1)), sum(col("x"))))( (prev, next) => {
         seen = seen :+ prev :+ next
         // order must be (count, sum) exactly as passed — a reorder would
@@ -53,18 +54,18 @@ class IterateSpec extends SparkSpec {
         assert(prev.head.asInstanceOf[Number].longValue === 3L, s"metric order lost: $prev")
         assert(prev(1).asInstanceOf[Number].longValue === 6L, s"metric order lost: $prev")
         prev == next
-      })
+      }).requireConverged
     assert(fp.converged && fp.rounds === 1)
     assert(seen.nonEmpty)
     // empty seed: count is 0, sum is NULL — the caller's `same` sees the
     // raw values and the loop still terminates
     val empty = Seq.empty[Long].toDF("x")
-    val fpE = Iterate.fixpointObservedConvergedBy(empty, 5)((st, _) => st)(
+    val fpE = Iterate.fixpointObservedBy(empty, 5)((st, _) => st)(
       Seq(count(lit(1)), sum(col("x"))))( (prev, next) => {
         assert(prev.head.asInstanceOf[Number].longValue === 0L)
         assert(prev(1) == null, "sum over an empty frame must surface as NULL, not 0")
         true
-      })
+      }).requireConverged
     assert(fpE.converged && fpE.rounds === 1)
   }
 
@@ -72,9 +73,9 @@ class IterateSpec extends SparkSpec {
     import spark.implicits._
     val seed = Seq(1L, 2L).toDF("x")
     val ex = intercept[IllegalStateException] {
-      Iterate.fixpointObservedConvergedBy(seed, 5)((st, _) => st)(
+      Iterate.fixpointObservedBy(seed, 5)((st, _) => st)(
         Seq(sum(col("x"))))((_, _) =>
-        throw new IllegalStateException("probe integrity violation"))
+        throw new IllegalStateException("probe integrity violation")).requireConverged
     }
     assert(ex.getMessage.contains("probe integrity"))
   }
@@ -85,7 +86,8 @@ class IterateSpec extends SparkSpec {
     // metric is always 1 — never converges; the cap must raise, not hand
     // back a mid-flight state
     intercept[IllegalStateException] {
-      Iterate.fixpointObservedConverged(seed, 3)((st, _) => st)(count(lit(1)))
+      Iterate.fixpointObservedBy(seed, 3)((st, _) => st)(Seq(count(lit(1))))(
+        Iterate.noneLeft).requireConverged
     }
   }
 
@@ -98,9 +100,9 @@ class IterateSpec extends SparkSpec {
     // truncated; dropping them would make it unreadable, not slow).
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val seed = (1L to 32L).toDF("x")
-    val fp = Iterate.fixpointObserved(seed, 20)((st, _) =>
+    val fp = Iterate.fixpointObservedBy(seed, 20)((st, _) =>
       st.filter(col("x") % 2 === 0).select((col("x") / 2).cast("long").as("x")))(
-      count(when(col("x") % 2 =!= 0, 1)))
+      Seq(count(when(col("x") % 2 =!= 0, 1))))(Iterate.noneLeft)
     // {1..32} -> {1..16} -> {1..8} -> {1..4} -> {1,2} -> {1} -> {}:
     // the {1} state still carries an odd value (progress 1), so the loop
     // runs one more round and converges on the empty state

@@ -42,6 +42,17 @@ class VersionedTableSpec extends SparkSpec {
     // replay of a committed id is a no-op and does not disturb retention
     assert(!commit(2L, 1000L))
     assert(read(2L) === Some(22L) && read(1L) === Some(15L))
+
+    // a version write runs under the marker-table lock alone: it leaves
+    // no lock file of its own and is not accounted as an artifact build
+    import scala.jdk.CollectionConverters._
+    val versionLock = (table + "_v\\d+\\._graft_lock").r
+    val root = new java.io.File(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
+    val versionLocks = root.list().filter(versionLock.matches)
+    assert(versionLocks.isEmpty, s"per-version lock files: ${versionLocks.toSeq}")
+    val versionBuilds =
+      graft.sources.Warehouse.buildSeconds.keySet.asScala.filter(_.startsWith(table + "_v"))
+    assert(versionBuilds.isEmpty, s"version writes counted as builds: ${versionBuilds.toSeq}")
   }
 
   test("a crash orphan does not occupy a retention slot: committed snapshots keep their window") {
