@@ -19,9 +19,22 @@ import graft.functions.NativeExprs
   *   (HashPartitioning replaces both the partition binary AND the
   *   TaskManager's single-node concatenation phase — the latter disappears,
   *   SURVEY.md O4) → per-key aggregation (partial+final HashAggregate or
-  *   `mapGroups`) → `write.text` (the task-commit protocol provides the
-  *   first-writer-wins exactly-once semantics of
-  *   DistrStorage.moveUniqueReduceResultsToDestDir, DistrStorage.java:213-233).
+  *   `mapGroups`) → the `graft-kv` DSv2 writer
+  *   ([[graft.sources.KvDirSource]]).
+  *
+  * The sink is the reference's own protocol (SURVEY.md O6): each task
+  * attempt writes its own tagged file (`putReduceFile`,
+  * DistrStorage.java:116-123), and the driver moves exactly one file per
+  * partition into the destination (`moveUniqueReduceResultsToDestDir`,
+  * DistrStorage.java:213-233) — Spark's commit coordinator accepts one
+  * attempt per partition, and a retried or speculative attempt's file is
+  * never moved. Overwrite happens at that commit, so a failed job leaves
+  * the previous output in place. The destination holds only
+  * `part-<job token>-p<partition>` shards: no `_SUCCESS` marker (an old
+  * one is deleted) and no local `.crc` sidecars. A row the line format
+  * cannot represent fails the job loudly instead of landing as a line
+  * that reads back wrong: a value holding a line terminator or starting
+  * with whitespace, or a null key or value.
   *
   * Scale notes (100 TB): the plan contains exactly ONE shuffle on `key`
   * (the reduce's own groupBy/groupByKey exchange, or an explicit
@@ -98,14 +111,16 @@ object Engine {
         .toDF(KV.KeyCol, KV.ValueCol)
   }
 
-  /** Run a spec end-to-end: plan + sink. The text sink writes the
-    * reference's `"<key> <value>"` line format; Spark's commit protocol
-    * supplies exactly-once output under retry/speculation (SURVEY.md O6). */
+  /** Run a spec end-to-end: plan + sink. The `graft-kv` sink writes the
+    * reference's `"<key> <value>"` line format, at most `r_num` shards
+    * (one per non-empty partition), with exactly-once output under
+    * retry and speculation (SURVEY.md O6). The old output is replaced
+    * only when the job commits; rows the format cannot represent fail
+    * the job (see the header). */
   def run(spark: SparkSession, spec: BatchSpec): Unit = {
     val out = plan(spark, spec)
-      .select(concat_ws(" ", col(KV.KeyCol), col(KV.ValueCol)).as("value"))
     val sized = if (spec.rNum > 0) out.coalesce(spec.rNum) else out
-    sized.write.mode(SaveMode.Overwrite).text(spec.finalDestDirId)
+    sized.write.format("graft-kv").mode(SaveMode.Overwrite).save(spec.finalDestDirId)
   }
 
   def runJson(spark: SparkSession, json: String): Unit =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableRound.{asScaled, asScaledSql, sumExact}
 
-/** File-format coverage beyond parquet and the engine's text sink: CSV,
+/** File-format coverage beyond parquet and the engine's KV sink: CSV,
   * JSON-lines and ORC sink→source round-trips.
   *
   * The reference's storage layer is format-agnostic raw files
@@ -148,13 +148,14 @@ object Formats {
 
   /** The reference's NATIVE `"<key> <value>"` line format through the
     * custom DataSource V2 reader ([[KvDirSource]]): documents written as
-    * KV lines by the plain text sink (the engine's own output format),
+    * KV lines by the plain text sink (the engine's own line format),
     * read back as a first-class (key, value) table via
     * `format("graft-kv")`, aggregated, and hash-matched against the
     * parquet-derived oracle — certifying the custom source's parsing,
     * file enumeration and type bridging end-to-end. The write intentionally
-    * uses the STOCK text sink: producer and consumer are independent
-    * implementations of the same format contract. */
+    * uses the STOCK text sink, not the engine's `graft-kv` writer:
+    * producer and consumer are independent implementations of the same
+    * format contract. */
   def qSourceKv(s: SparkSession, d: String): DataFrame = {
     val out = sinkDir(s, "kv")
     Tables.documents(s, d)

@@ -1,12 +1,14 @@
 package graft.sources
 
-import java.io.{BufferedReader, InputStreamReader}
+import java.io.{BufferedOutputStream, BufferedReader, FileOutputStream, InputStreamReader, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -47,9 +49,11 @@ import graft.functions.NativeExprs
   * Readers stream lines through a buffered decoder — constant memory per
   * partition. FileSystem resolution uses the SESSION's Hadoop conf
   * everywhere: driver-side code (listing, commit, truncate) reads it
-  * directly, and every reader/writer factory captures it as a
-  * `SerializableConfiguration` at plan time — non-default FS settings
-  * reach the executors on a real cluster.
+  * directly, and every reader/writer factory ships it to the executors
+  * as ONE `Broadcast[SerializableConfiguration]` per job, as Spark's own
+  * file scans do. Non-default FS settings reach every task on a real
+  * cluster, and no task deserializes its own copy of the ~1100-entry conf
+  * (~5 ms a task).
   */
 class KvDirSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-kv"
@@ -68,14 +72,19 @@ object KvDirSource {
 
   /** The session's Hadoop conf, resolved ON THE DRIVER (planning,
     * commit, truncate, listing). Executor-side code must never call
-    * this — it receives a [[SerializableConfiguration]] captured here
-    * at factory-construction time instead, so non-default FS settings
-    * (core-site, spark.hadoop.*, per-session overrides) reach every
-    * open/create/rename on a real cluster. */
+    * this — it receives the [[broadcastConf]] of its factory instead, so
+    * non-default FS settings (core-site, spark.hadoop.*, per-session
+    * overrides) reach every open/create/rename on a real cluster. */
   private[sources] def driverHadoopConf(): Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
+    SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
+
+  /** `conf` as one broadcast for a job's tasks: each task reads the
+    * shared value instead of deserializing a copy its factory carried. */
+  private[sources] def broadcastConf(
+      conf: Configuration = driverHadoopConf()): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
   val Schema: StructType =
     StructType(Seq(StructField("key", StringType), StructField("value", StringType)))
 
@@ -180,22 +189,29 @@ private[sources] class KvTable(path: String) extends Table with SupportsRead wit
   * a zero-padded millis prefix, so sequential append jobs produce
   * lexicographically increasing names — the compliant producer for
   * [[KvMicroBatchStream]]'s monotone-naming contract. Staging is
-  * per-job (`_temp/<jobToken>/`) so concurrent jobs cannot clobber each
-  * other's staged files, rename failures raise instead of reporting
-  * success over lost data, and empty partitions commit no shard. Rows
+  * per-job (`_temp/<jobToken>/`, made once by the driver) so concurrent
+  * jobs cannot clobber each other's staged files, rename failures raise
+  * instead of reporting success over lost data, and empty partitions
+  * commit no shard. Overwrite (truncate) happens AT COMMIT: the old
+  * shards and a stale `_SUCCESS` marker go only once every task has
+  * succeeded, so a failed job leaves the previous output in place. Rows
   * the line format cannot represent — null/empty/whitespace-bearing
   * keys, values with a leading `\s` or embedded line terminator — are
   * REJECTED at write time (silently writing them would shift keys or
-  * split records on read-back). Line rule is the
-  * engine sink's `concat_ws(" ", key, value)` (an empty value writes a
-  * trailing space; values with LEADING whitespace are not representable
-  * in the reference format — `iss >> key` swallows the run).
+  * split records on read-back). Line rule is `key + " " + value`, what
+  * `concat_ws(" ", key, value)` writes for non-null columns (an empty
+  * value writes a trailing space; values with LEADING whitespace are not
+  * representable in the reference format — `iss >> key` swallows the
+  * run). This writer is the engine's sink ([[graft.engine.Engine.run]]).
   *
   * Like the reader, the writer resolves its Hadoop FileSystem from the
   * SESSION's conf: truncate/commit/abort run on the driver and read it
-  * directly, and the writer factories ship it to executor tasks as a
-  * `SerializableConfiguration` — staging, rename, and truncate all see
-  * the deployment's real FS settings. */
+  * directly, and the writer factories ship it to executor tasks as one
+  * broadcast per job — staging, rename, and truncate all see the
+  * deployment's real FS settings. A task writes its staged file below
+  * any checksum layer (see [[KvCommitOps.createStaged]]), so a shard on
+  * the local FS has no `.crc` sidecar. Each task reports its bytes and
+  * rows to its output metrics, as Spark's file sinks do. */
 private[sources] class KvWriteBuilder(path: String, info: LogicalWriteInfo)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
@@ -246,8 +262,7 @@ private[sources] object KvStreamingWrite {
 private[sources] class KvStreamingWrite(path: String) extends StreamingWrite {
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new KvStreamingWriterFactory(
-      path, new SerializableConfiguration(KvDirSource.driverHadoopConf()))
+    new KvStreamingWriterFactory(path, KvDirSource.broadcastConf())
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
@@ -259,12 +274,12 @@ private[sources] class KvStreamingWrite(path: String) extends StreamingWrite {
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
     root.getFileSystem(KvDirSource.driverHadoopConf())
-      .delete(new Path(root, s"_temp/${KvStreamingWrite.token(epochId)}"), true)
+      .delete(KvCommitOps.stagingDir(root, KvStreamingWrite.token(epochId)), true)
   }
 }
 
 private[sources] class KvStreamingWriterFactory(
-    path: String, conf: SerializableConfiguration)
+    path: String, conf: Broadcast[SerializableConfiguration])
     extends StreamingDataWriterFactory {
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
@@ -275,12 +290,52 @@ private[sources] class KvStreamingWriterFactory(
 private[sources] case class KvCommitMessage(staged: String, finalName: String)
     extends WriterCommitMessage
 
-/** The commit machinery both write paths share — ONE definition of the
-  * rename-or-fail rule and the staging cleanup, so a fix to either (the
-  * boolean-returning FS API warts, the shared `_temp` lifecycle, the
-  * default-`Configuration()` deployment note on [[KvWriteBuilder]])
-  * lands in both paths at once. */
+/** The staging and commit machinery both write paths share — ONE
+  * definition of the staging dir and file, the rename-or-fail rule and
+  * the staging cleanup, so a fix to any of them (the boolean-returning
+  * FS API warts, the shared `_temp` lifecycle, the local FS's `chmod`
+  * forks) lands in both paths at once. */
 private[sources] object KvCommitOps {
+
+  def stagingDir(root: Path, token: String): Path = new Path(root, s"_temp/$token")
+
+  /** `fs` below its client-side checksum layer (the local FS's `.crc`
+    * sidecars): staging goes straight to the underlying store. */
+  private def unwrapped(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
+  /** Make a staging dir, and open a task's staged file in one, with no
+    * permission step. Hadoop's local FS sets the default mode on every
+    * dir and file it creates, even when handed no permission, and
+    * without libhadoop each of those is a forked `chmod` (2–3 ms); so on
+    * the local FS both go through java.io and take the process umask,
+    * like any file the JVM writes. Any other FS gets a null permission,
+    * which HDFS replaces with its default. */
+  def mkStagingDir(fs: FileSystem, dir: Path): Unit = {
+    val made = unwrapped(fs) match {
+      case local: RawLocalFileSystem =>
+        val f = local.pathToFile(dir)
+        f.mkdirs() || f.isDirectory
+      case other => other.mkdirs(dir)
+    }
+    if (!made) throw new java.io.IOException(s"graft-kv: cannot create staging dir $dir")
+  }
+
+  /** See [[mkStagingDir]]. The parent is made if missing: a streaming
+    * epoch's staging dir has no driver hook before its tasks run. */
+  def createStaged(fs: FileSystem, file: Path): OutputStream = {
+    val buffer = 1 << 16
+    unwrapped(fs) match {
+      case local: RawLocalFileSystem =>
+        mkStagingDir(local, file.getParent)
+        new BufferedOutputStream(new FileOutputStream(local.pathToFile(file)), buffer)
+      case other =>
+        new BufferedOutputStream(other.create(file, null, true, buffer,
+          other.getDefaultReplication(file), other.getDefaultBlockSize(file), null), buffer)
+    }
+  }
 
   /** Rename every staged shard into place. Empty partitions commit a
     * no-op message (no empty shard litters the directory — each would
@@ -311,7 +366,7 @@ private[sources] object KvCommitOps {
     * files under its own token must survive); the shared `_temp` parent
     * goes best-effort once nobody is staging in it. */
   def cleanupStaging(fs: FileSystem, root: Path, token: String): Unit = {
-    fs.delete(new Path(root, s"_temp/$token"), true)
+    fs.delete(stagingDir(root, token), true)
     val tempRoot = new Path(root, "_temp")
     if (fs.exists(tempRoot) && fs.listStatus(tempRoot).isEmpty)
       fs.delete(tempRoot, false)
@@ -326,10 +381,14 @@ private[sources] class KvBatchWrite(path: String, truncate: Boolean) extends Bat
   private val jobToken =
     f"${System.currentTimeMillis()}%013d-${util.UUID.randomUUID().toString.take(8)}"
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new KvWriterFactory(
-      path, jobToken,
-      new SerializableConfiguration(KvDirSource.driverHadoopConf()))
+  /** Makes the job's staging dir once, so no task has to; it also makes
+    * the destination exist when the job has no tasks. */
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    val conf = KvDirSource.driverHadoopConf()
+    val root = new Path(path)
+    KvCommitOps.mkStagingDir(root.getFileSystem(conf), KvCommitOps.stagingDir(root, jobToken))
+    new KvWriterFactory(path, jobToken, KvDirSource.broadcastConf(conf))
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
@@ -344,6 +403,8 @@ private[sources] class KvBatchWrite(path: String, truncate: Boolean) extends Bat
           throw new java.io.IOException(
             s"graft-kv truncate: delete of stale shard $old failed")
       }
+      // a Hadoop job's marker would vouch for shards that are gone
+      fs.delete(new Path(root, "_SUCCESS"), false)
     }
     KvCommitOps.commitStaged(fs, root, messages, idempotentReplay = false)
     KvCommitOps.cleanupStaging(fs, root, jobToken)
@@ -352,27 +413,32 @@ private[sources] class KvBatchWrite(path: String, truncate: Boolean) extends Bat
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
     root.getFileSystem(KvDirSource.driverHadoopConf())
-      .delete(new Path(root, s"_temp/$jobToken"), true)
+      .delete(KvCommitOps.stagingDir(root, jobToken), true)
   }
 }
 
 private[sources] class KvWriterFactory(
-    path: String, jobToken: String, conf: SerializableConfiguration)
+    path: String, jobToken: String, conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new KvDataWriter(path, jobToken, partitionId, taskId, conf)
 }
 
+/** One task's staged shard. Rows go out as their UTF-8 bytes, with no
+  * String decode or re-encode; the representability checks test bytes,
+  * which agree with char tests because every byte they look for is ASCII
+  * and no byte of a multi-byte UTF-8 sequence is. */
 private[sources] class KvDataWriter(
     path: String, jobToken: String, partitionId: Int, taskId: Long,
-    conf: SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
     extends DataWriter[InternalRow] {
+  import KvDataWriter._
   private val staged =
-    new Path(new Path(path, s"_temp/$jobToken"), s"p$partitionId-t$taskId")
-  private val fs = staged.getFileSystem(conf.value)
-  private val out = new java.io.BufferedWriter(
-    new java.io.OutputStreamWriter(fs.create(staged, true), StandardCharsets.UTF_8))
+    new Path(KvCommitOps.stagingDir(new Path(path), jobToken), s"p$partitionId-t$taskId")
+  private val fs = staged.getFileSystem(conf.value.value)
+  private val out = KvCommitOps.createStaged(fs, staged)
   private var rows = 0L
+  private var bytes = 0L
 
   override def write(row: InternalRow): Unit = {
     val k = row.getUTF8String(0)
@@ -380,23 +446,23 @@ private[sources] class KvDataWriter(
     // fail LOUD on rows the line format cannot represent — writing them
     // would silently shift keys, split records, or drop rows on read-back
     require(k != null && v != null, "graft-kv: null key or value is not representable")
-    val ks = k.toString
-    val vs = v.toString
-    require(ks.nonEmpty && !ks.exists(c => NativeExprs.isWs(c)),
-      s"graft-kv: key must be non-empty with no whitespace, got '$ks'")
-    require(vs.isEmpty || !NativeExprs.isWs(vs.charAt(0)),
-      s"graft-kv: value must not start with whitespace (the separator swallows it): '$vs'")
-    require(!vs.exists(c => c == '\n' || c == '\r'),
-      s"graft-kv: value must not contain line terminators: '$vs'")
-    out.write(ks)
+    require(k.numBytes > 0 && !hasByte(k, isWs),
+      s"graft-kv: key must be non-empty with no whitespace, got '$k'")
+    require(v.numBytes == 0 || !isWs(v.getByte(0)),
+      s"graft-kv: value must not start with whitespace (the separator swallows it): '$v'")
+    require(!hasByte(v, isLineBreak),
+      s"graft-kv: value must not contain line terminators: '$v'")
+    k.writeTo(out)
     out.write(' ')
-    out.write(vs)
+    v.writeTo(out)
     out.write('\n')
     rows += 1L
+    bytes += k.numBytes + v.numBytes + 2L
   }
 
   override def commit(): WriterCommitMessage = {
     out.close()
+    GraftBridge.reportOutput(bytes, rows)
     if (rows == 0L) {
       fs.delete(staged, false)
       KvCommitMessage("", "")
@@ -409,6 +475,20 @@ private[sources] class KvDataWriter(
   }
 
   override def close(): Unit = ()
+}
+
+private[sources] object KvDataWriter {
+  private def isWs(b: Int): Boolean = NativeExprs.isWs(b)
+  private def isLineBreak(b: Int): Boolean = b == '\n' || b == '\r'
+
+  private def hasByte(s: UTF8String, p: Int => Boolean): Boolean = {
+    var i = 0
+    while (i < s.numBytes) {
+      if (p(s.getByte(i))) return true
+      i += 1
+    }
+    false
+  }
 }
 
 private[sources] object KvScanBuilder {
@@ -510,12 +590,11 @@ private[sources] class KvCountScan(
   override def planInputPartitions(): Array[InputPartition] =
     KvScan.listPartitions(path)
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvCountReaderFactory(
-      keyEquals, new SerializableConfiguration(KvDirSource.driverHadoopConf()))
+    new KvCountReaderFactory(keyEquals, KvDirSource.broadcastConf())
 }
 
 private[sources] class KvCountReaderFactory(
-    keyEquals: Option[String], conf: SerializableConfiguration)
+    keyEquals: Option[String], conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new KvCountPartitionReader(
@@ -523,9 +602,9 @@ private[sources] class KvCountReaderFactory(
 }
 
 private[sources] class KvCountPartitionReader(
-    file: String, keyEquals: Option[String], conf: SerializableConfiguration)
+    file: String, keyEquals: Option[String], conf: Broadcast[SerializableConfiguration])
     extends PartitionReader[InternalRow] {
-  private val records = new KvRecords(file, keyEquals, conf.value)
+  private val records = new KvRecords(file, keyEquals, conf.value.value)
   private var emitted = false
   private var current: InternalRow = _
 
@@ -551,9 +630,7 @@ private[sources] class KvScan(
   override def planInputPartitions(): Array[InputPartition] =
     KvScan.listPartitions(path)
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(
-      required.fieldNames, keyEquals,
-      new SerializableConfiguration(KvDirSource.driverHadoopConf()))
+    new KvReaderFactory(required.fieldNames, keyEquals, KvDirSource.broadcastConf())
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new KvMicroBatchStream(path, required.fieldNames, keyEquals, maxFilesPerTrigger)
 }
@@ -670,9 +747,7 @@ private[sources] class KvMicroBatchStream(
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(
-      fields, keyEquals,
-      new SerializableConfiguration(KvDirSource.driverHadoopConf()))
+    new KvReaderFactory(fields, keyEquals, KvDirSource.broadcastConf())
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
   override def deserializeOffset(json: String): Offset = KvOffset.fromJson(json)
@@ -707,7 +782,7 @@ private[sources] case class KvInputPartition(file: String) extends InputPartitio
 
 private[sources] class KvReaderFactory(
     fields: Array[String], keyEquals: Option[String],
-    conf: SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new KvPartitionReader(
@@ -716,9 +791,9 @@ private[sources] class KvReaderFactory(
 
 private[sources] class KvPartitionReader(
     file: String, fields: Array[String], keyEquals: Option[String],
-    conf: SerializableConfiguration)
+    conf: Broadcast[SerializableConfiguration])
     extends PartitionReader[InternalRow] {
-  private val records = new KvRecords(file, keyEquals, conf.value)
+  private val records = new KvRecords(file, keyEquals, conf.value.value)
   private var current: InternalRow = _
 
   override def next(): Boolean = {

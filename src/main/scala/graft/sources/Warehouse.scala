@@ -329,7 +329,7 @@ object Warehouse {
           // longer derives from the data on disk — drop (managed: files
           // go too; external: clearLeftover below removes them), safely
           // OURS to delete because we hold the build lock
-          println(s"[warehouse] source changed under live JVM — rebuild $name")
+          println(s"[warehouse] source changed under live JVM - rebuild $name")
           s.sql(s"DROP TABLE $name")
         }
         clearLeftover(s, name)

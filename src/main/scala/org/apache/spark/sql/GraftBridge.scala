@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge into Spark's `private[sql]` Column↔Expression conversion
@@ -9,6 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * expressions — now goes through this internal utility. This is the
   * standard shim every Spark-extension library ships: one file inside the
   * org.apache.spark.sql package, nothing else reaches into internals.
+  * It also reaches the `private[spark]` task output metrics a DSv2 writer
+  * needs ([[reportOutput]]).
   */
 object GraftBridge {
   /** Re-export of the `private[sql]` AbstractDataType so graft expressions
@@ -25,4 +28,15 @@ object GraftBridge {
       spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Record a DSv2 writer task's output in its task metrics, as Spark's
+    * file sinks do through their stats tracker: a DataWriter has no such
+    * hook, and the `OutputMetrics` setters are `private[spark]`. No-op
+    * outside a task. */
+  def reportOutput(bytes: Long, records: Long): Unit =
+    Option(TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setBytesWritten(bytes)
+      m.setRecordsWritten(records)
+    }
 }

@@ -6,11 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs, built by [[GraftSession]] like
   * every main's: 4 cores, so 4 shuffle partitions — tiny fixtures don't
-  * schedule 200 tasks. */
+  * schedule 200 tasks. A suite reuses the live session an earlier suite
+  * started: calling `start` again would re-apply confs a running session
+  * cannot take, and Spark would warn about it once per suite. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   // maxFailures=4 → retry semantics testable
   lazy val spark: SparkSession =
-    GraftSession.start("local[4, 4]", "spark.app.name" -> getClass.getSimpleName)
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .filterNot(_.sparkContext.isStopped)
+      .getOrElse(GraftSession.start("local[4, 4]", "spark.app.name" -> getClass.getSimpleName))
 
   override def afterAll(): Unit = {
     // Session is shared across suites in one JVM; don't stop it here.

@@ -1,11 +1,24 @@
 package graft.engine
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
 import graft.SparkSpec
 import graft.functions.{LineKv, LineTokens}
+import graft.sources.KvDirSource
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction, RegExpReplace, RLike, StringSplit}
-import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
+import org.apache.spark.sql.connector.read.SupportsPushDownAggregates
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, PhysicalWriteInfo}
+import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.{CaseInsensitiveStringMap, QueryExecutionListener}
 import scala.jdk.CollectionConverters._
 
 /** Golden tests mirroring the reference's test corpus:
@@ -35,8 +48,7 @@ class EngineSpec extends SparkSpec {
       }
       .toMap
 
-  private def wordcount(input: Path, m: Int, r: Int): Map[String, String] = {
-    val out = Files.createTempDirectory("graft-out-").resolve("dest")
+  private def wordcountInto(input: Path, out: Path, m: Int, r: Int = 2): Unit =
     Engine.run(
       spark,
       BatchSpec(
@@ -46,6 +58,10 @@ class EngineSpec extends SparkSpec {
         finalDestDirId = out.toString,
         splitCount = m,
         rNum = r))
+
+  private def wordcount(input: Path, m: Int, r: Int): Map[String, String] = {
+    val out = Files.createTempDirectory("graft-out-").resolve("dest")
+    wordcountInto(input, out, m, r)
     readOutput(out)
   }
 
@@ -220,6 +236,147 @@ class EngineSpec extends SparkSpec {
       val outside = interpreted(plan).filter(_.expressions.exists(_.exists(isKernel)))
       assert(outside.isEmpty, s"$op: line kernel outside whole-stage codegen:\n$plan")
     }
+  }
+
+  // ---- the graft-kv sink (SURVEY.md O6)
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    if (t == null) Nil else t +: causes(t.getCause)
+
+  private def listing(dir: Path): Seq[String] =
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+
+  /** Poll `cond` for up to 10 s: listener events arrive on another thread. */
+  private def eventually(cond: => Boolean): Unit = {
+    val deadline = System.nanoTime() + 10e9.toLong
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+  }
+
+  test("split_count 0 leaves an existing destination with no shard") {
+    val in = writeCorpus(clientCorpus)
+    val out = Files.createTempDirectory("graft-out-").resolve("dest")
+    wordcountInto(in, out, m = 1)
+    assert(listing(out).exists(_.startsWith("part-")))
+    wordcountInto(in, out, m = 0)
+    assert(Files.isDirectory(out))
+    assert(listing(out) === Nil, "an empty job must replace the old shards with none")
+  }
+
+  test("re-running over an old text-sink output leaves only the new shards") {
+    // the layout Hadoop's text committer leaves: part-*.txt, .crc sidecars, _SUCCESS
+    import spark.implicits._
+    val in = writeCorpus(clientCorpus)
+    val out = Files.createTempDirectory("graft-out-").resolve("dest")
+    Seq("stale 1", "old 2").toDF("value").repartition(2).write.text(out.toString)
+    val old = listing(out)
+    assert(old.contains("_SUCCESS") && old.exists(_.endsWith(".txt.crc")), s"fixture: $old")
+    wordcountInto(in, out, m = 3)
+    val now = listing(out)
+    assert(now.nonEmpty && now.forall(n => n.startsWith("part-") && !n.endsWith(".txt")),
+      s"old files or markers left behind: $now")
+    assert(readOutput(out) === expectedCounts(clientCorpus))
+  }
+
+  test("a generic reduce value with a line terminator or leading whitespace fails the job") {
+    // written as lines, these would split or lose their leading blank on
+    // read-back; the job fails and, since overwrite happens at commit,
+    // the previous output survives
+    Ops.registerReduce(GenericReduce("spec-two-lines", (_, _) => "x\ny"))
+    Ops.registerReduce(GenericReduce("spec-indented", (_, _) => " x"))
+    val in = writeCorpus(Seq("a 1", "b 2"))
+    val out = Files.createTempDirectory("graft-out-").resolve("dest")
+    Engine.run(spark, BatchSpec(List("identity"), List("sum_ints"), in.toString, out.toString, -1, 1))
+    for ((op, message) <- Seq(
+        "spec-two-lines" -> "value must not contain line terminators",
+        "spec-indented" -> "value must not start with whitespace")) {
+      val e = intercept[SparkException] {
+        Engine.run(spark, BatchSpec(List("identity"), List(op), in.toString, out.toString, -1, 1))
+      }
+      assert(causes(e).exists(c => c.getMessage != null && c.getMessage.contains(message)),
+        s"$op: expected graft-kv's '$message', got: $e")
+      assert(readOutput(out) === Map("a" -> "1", "b" -> "2"), s"$op: old output lost")
+    }
+  }
+
+  test("the serialized graft-kv writer and reader factories are under 4 KB") {
+    // the session's Hadoop conf travels as a broadcast, not inside each
+    // factory (a SerializableConfiguration copy is ~112 KB)
+    val dir = Files.createTempDirectory("graft-kv-factories-").toString
+    val table = new KvDirSource().getTable(KvDirSource.Schema, Array.empty, Map("path" -> dir).asJava)
+    val info = new LogicalWriteInfo {
+      override def queryId(): String = "factory-size"
+      override def schema() = KvDirSource.Schema
+      override def options() = CaseInsensitiveStringMap.empty()
+    }
+    val phys = new PhysicalWriteInfo { override def numPartitions(): Int = 1 }
+    val write = table.asInstanceOf[SupportsWrite].newWriteBuilder(info).build()
+    def scanBuilder() =
+      table.asInstanceOf[SupportsRead].newScanBuilder(CaseInsensitiveStringMap.empty())
+    val counted = scanBuilder()
+    assert(counted.asInstanceOf[SupportsPushDownAggregates]
+      .pushAggregation(new Aggregation(Array(new CountStar()), Array.empty)))
+    val factories = Seq[(String, AnyRef)](
+      "batch writer" -> write.toBatch.createBatchWriterFactory(phys),
+      "streaming writer" -> write.toStreaming.createStreamingWriterFactory(phys),
+      "row reader" -> scanBuilder().build().toBatch.createReaderFactory(),
+      "count reader" -> counted.build().toBatch.createReaderFactory(),
+      "stream reader" -> scanBuilder().build()
+        .toMicroBatchStream(Files.createTempDirectory("graft-kv-ckpt-").toString)
+        .createReaderFactory())
+    for ((name, f) <- factories) {
+      val bytes = new java.io.ByteArrayOutputStream()
+      val oos = new java.io.ObjectOutputStream(bytes)
+      oos.writeObject(f)
+      oos.close()
+      assert(bytes.size < 4096, s"$name factory serializes to ${bytes.size} bytes")
+    }
+  }
+
+  test("Engine.run writes through graft-kv, not Hadoop's InsertIntoHadoopFsRelationCommand") {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val in = writeCorpus(clientCorpus)
+    val out = Files.createTempDirectory("graft-out-").resolve("dest")
+    spark.listenerManager.register(listener)
+    try {
+      wordcountInto(in, out, m = 2)
+      eventually(!plans.isEmpty)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.asScala.toSeq.flatMap(nodes)
+    assert(all.exists(_.isInstanceOf[V2TableWriteExec]), s"no DSv2 write in: $plans")
+    assert(!all.exists {
+      case DataWritingCommandExec(_: InsertIntoHadoopFsRelationCommand, _) => true
+      case _ => false
+    }, s"Hadoop file write in: $plans")
+  }
+
+  test("the sink reports its bytes: summed task bytesWritten equals the shard bytes on disk") {
+    val written = new AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) written.addAndGet(e.taskMetrics.outputMetrics.bytesWritten)
+    }
+    val in = writeCorpus(clientCorpus)
+    val out = Files.createTempDirectory("graft-out-").resolve("dest")
+    spark.sparkContext.addSparkListener(listener)
+    val onDisk =
+      try {
+        wordcountInto(in, out, m = 3)
+        val size = Files.list(out).iterator().asScala.map(Files.size(_)).sum
+        eventually(written.get == size)
+        size
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(onDisk > 0)
+    assert(written.get === onDisk)
   }
 
   test("BatchSpec parses the reference-shaped JSON") {

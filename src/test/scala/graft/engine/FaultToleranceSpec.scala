@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   *     the job succeeds (reference: MAX_ATTEMPT=3 re-runs,
   *     TaskManagerImpl.java:368-386).
   *   - O6 exactly-once output: the failed attempt's partial output is
-  *     discarded by the commit protocol — no duplicate or lost rows
+  *     discarded by the commit protocol (Hadoop's for parquet, the
+  *     graft-kv staged commit for the engine) — no duplicate or lost rows
   *     (reference: first-writer-wins dedup-move,
   *     DistrStorage.java:213-233).
   *
@@ -58,7 +59,8 @@ class FaultToleranceSpec extends SparkSpec {
     // The SAME property through the REAL Engine.run path: a registered
     // flaky map op (≡ a misbehaving user binary) in the chain of a normal
     // JSON-shaped spec — wordcount must come out exactly-once through the
-    // engine's own parse, reduce, and text-sink commit.
+    // engine's own parse, reduce, and graft-kv staged commit (the test
+    // name predates that sink).
     val in = Files.createTempDirectory("graft-ft-in-")
     (0 until 8).foreach(i => Files.writeString(in.resolve(i.toString), "a b c a\n"))
     val out = Files.createTempDirectory("graft-ft-out-").resolve("dest")

@@ -65,7 +65,8 @@ class FormatsSpec extends SparkSpec {
 
   test("engine text sink output is re-readable as a text source (chaining)") {
     // Reference chains batches by feeding one batch's dest dir to the next
-    // (directory in/out contract) — prove the same works here.
+    // (directory in/out contract) — prove the same works here: the
+    // graft-kv shards the engine writes read back as plain text lines.
     val in = Files.createTempDirectory("graft-chain-in-")
     Files.writeString(in.resolve("0"), "a b a\n")
     val mid = Files.createTempDirectory("graft-chain-").resolve("mid")

@@ -395,10 +395,7 @@ class KvDirSourceSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft-kv-replay-").toString
     val w = new KvStreamingWrite(out)
     def stage(epoch: Long, pid: Int, rows: Seq[(String, String)]) = {
-      val dw = new KvStreamingWriterFactory(
-        out,
-        new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf()))
+      val dw = new KvStreamingWriterFactory(out, KvDirSource.broadcastConf())
         .createWriter(pid, taskId = pid.toLong, epoch)
       rows.foreach { case (k, v) =>
         dw.write(InternalRow(UTF8String.fromString(k), UTF8String.fromString(v)))
@@ -452,6 +449,9 @@ class KvDirSourceSpec extends SparkSpec {
     assert(offs === offs.sorted, s"non-monotone offsets: $offs")
   }
 
+  // Engine.run writes through graft-kv. This pins that a Hadoop text
+  // sink's output (the engine's sink before graft-kv), or any writer of
+  // the `concat_ws(" ", key, value)` line format, reads back intact.
   test("KV round-trip through the engine text sink preserves every record") {
     val out = Files.createTempDirectory("graft-kv-rt-").toString
     import spark.implicits._
