@@ -122,7 +122,4 @@ object Engine {
     val sized = if (spec.rNum > 0) out.coalesce(spec.rNum) else out
     sized.write.format("graft-kv").mode(SaveMode.Overwrite).save(spec.finalDestDirId)
   }
-
-  def runJson(spark: SparkSession, json: String): Unit =
-    run(spark, BatchSpec.fromJson(json))
 }

@@ -45,18 +45,22 @@ object GraftFunctions {
     // width; the Scala DSL (NativeExprs.wordShingles) exposes n
     ("graft_word_shingles", 1, es => WordShingles(es(0), 3)))
 
+  /** Idempotent: a name the session already holds (an earlier call, or
+    * the extensions path) keeps its builder, so repeat calls replace
+    * nothing. */
   def register(spark: SparkSession): Unit =
-    all.foreach { case (name, arity, builder) =>
-      // same arity validation as the extensions path — without it a
-      // wrong-arity SQL call dies in the builder with a nameless
-      // IndexOutOfBoundsException instead of a usable error
-      GraftBridge.registerFunction(
-        spark,
-        name,
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == arity, s"$name expects $arity arguments")
-          builder(exprs)
-        })
+    all.filter(f => GraftBridge.functionBuilder(spark, f._1).isEmpty).foreach {
+      case (name, arity, builder) =>
+        // same arity validation as the extensions path — without it a
+        // wrong-arity SQL call dies in the builder with a nameless
+        // IndexOutOfBoundsException instead of a usable error
+        GraftBridge.registerFunction(
+          spark,
+          name,
+          (exprs: Seq[Expression]) => {
+            require(exprs.length == arity, s"$name expects $arity arguments")
+            builder(exprs)
+          })
     }
 
   /** Live-session twin of the extensions path's `injectOptimizerRule` —

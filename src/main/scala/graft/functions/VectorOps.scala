@@ -20,9 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
-  /** Cast to ARRAY<DOUBLE> once, up front. */
-  def asDouble(v: Column): Column = v.cast("array<double>")
-
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 

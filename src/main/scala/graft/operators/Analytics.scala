@@ -826,8 +826,8 @@ object Analytics {
       .union(und.select(col("ib").as("ia"), col("ia").as("ib")))
       .localCheckpoint()
     val cur0 = edges.select(col("ia").as("node")).distinct()
-    var prevCount = -1L
-    val cur = Iterate.fixpoint(cur0, KcoreMaxRounds) { (curr, _) =>
+    // the survivor set only shrinks, so an unchanged size is the fixpoint
+    val cur = Iterate.fixpointObservedBy(cur0, KcoreMaxRounds) { (curr, _) =>
       edges
         .join(curr, col("ia") === col("node"), "leftsemi")
         .join(curr.select(col("node").as("nb")), col("ib") === col("nb"), "leftsemi")
@@ -835,12 +835,7 @@ object Analytics {
         .agg(count(lit(1)).as("dg"))
         .filter(col("dg") >= KcoreK)
         .select(col("ia").as("node"))
-    } { (prev, next) =>
-      val p = if (prevCount >= 0) prevCount else prev.count()
-      val n = next.count()
-      prevCount = n
-      p - n
-    }.requireConverged.state
+    } (Seq(count(lit(1))))(_ == _).requireConverged.state
     val core = edges
       .join(cur, col("ia") === col("node"), "leftsemi")
       .join(cur.select(col("node").as("nb")), col("ib") === col("nb"), "leftsemi")

@@ -3,19 +3,23 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** THE scaffold for driver-driven DataFrame fixpoints (connected
-  * components, PageRank, BFS, k-core peeling, BPE's merge loop). Every
-  * iterative operator previously hand-rolled the same three obligations;
-  * centralizing them means a drift in any one of them (a forgotten
-  * localCheckpoint quietly growing lineage 2^rounds, a missing backstop
-  * spinning on a non-converging input, a collect sneaking into a probe)
-  * is now a single-site review, not a five-site audit.
+  * components, PageRank, BFS, k-core peeling, label propagation, BPE's
+  * merge loop). Every iterative operator previously hand-rolled the same
+  * three obligations; centralizing them means a drift in any one of them
+  * (a forgotten localCheckpoint quietly growing lineage 2^rounds, a
+  * missing backstop spinning on a non-converging input, a collect
+  * sneaking into a probe) is now a single-site review, not a five-site
+  * audit.
   *
   * Contract:
   *   - every state (the seed and each step's output) is
   *     `localCheckpoint()`ed HERE — per-round lineage stays O(1), and
   *     `step` sends and receives plain, already-materialized frames;
-  *   - `progress(prev, next)` must be COUNT-shaped — its value is only
-  *     compared to 0 (rounds continue while > 0); never a collect;
+  *   - progress is OBSERVED, never probed: the caller names aggregate
+  *     columns that ride each state's checkpoint job, and `same` compares
+  *     the previous and the new state's values on the driver — no
+  *     `count()`, no collect, no second job per round; a fixed schedule
+  *     names no metric and never converges;
   *   - `maxRounds` is a BACKSTOP for schedule-shaped callers (a fixed
   *     merge-round budget) and a tripwire for convergence-shaped ones:
   *     correctness-bearing fixpoints (CC labels deciding what gets
@@ -64,24 +68,6 @@ private[operators] object Iterate {
     }
   }
 
-  /** Drive `state0` through `step(state, roundIndex)` (0-based index)
-    * until `progress(prev, next) == 0` or `maxRounds` executed. */
-  def fixpoint(state0: DataFrame, maxRounds: Int)(
-      step: (DataFrame, Int) => DataFrame)(
-      progress: (DataFrame, DataFrame) => Long): Fixpoint = {
-    var state = state0.localCheckpoint()
-    var rounds = 0
-    var more = true
-    while (more && rounds < maxRounds) {
-      val next = step(state, rounds).localCheckpoint()
-      rounds += 1
-      more = progress(state, next) > 0
-      dropCheckpoint(state) // superseded: next is materialized, probe done
-      state = next
-    }
-    Fixpoint(state, rounds, converged = !more)
-  }
-
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
   /** A count-shaped single-metric probe for [[fixpointObservedBy]]:
@@ -90,29 +76,32 @@ private[operators] object Iterate {
   val noneLeft: (Seq[Any], Seq[Any]) => Boolean = (_, next) =>
     next.head == null || next.head.asInstanceOf[Number].longValue <= 0
 
-  /** [[fixpoint]] with the progress probe FOLDED INTO the checkpoint
-    * materialization: `metrics` are AGGREGATE columns evaluated over each
-    * state's rows during the eager `localCheckpoint()` job itself
-    * (Spark's Observation/CollectMetrics machinery — the metrics ride the
-    * plan, every row is observed exactly once by the materializing
-    * action, and the values are available the moment the checkpoint
-    * returns). The seed's checkpoint is observed too, so a round pays
-    * exactly ONE job where the two-argument probe of [[fixpoint]] pays a
-    * second launch-a-job-and-rescan-the-checkpoint pass.
+  /** Drive `state0` through `step(state, roundIndex)` (0-based index)
+    * until `same` says the state stopped changing or `maxRounds` rounds
+    * ran. `metrics` are AGGREGATE columns evaluated over each state's
+    * rows during the eager `localCheckpoint()` job itself (Spark's
+    * Observation/CollectMetrics machinery — the metrics ride the plan,
+    * every row is observed exactly once by the materializing action, and
+    * the values are available the moment the checkpoint returns). The
+    * seed's checkpoint is observed too, so a round pays exactly ONE job.
     *
     * `same(prev, next)` sees the two observed value sequences (metric
     * order preserved) and returns true once converged: a state-summary
-    * comparison (sssp's (count, Σdist), CC's label sum), or [[noneLeft]]
-    * for a count of what the new state still has to do (peeling's "nodes
-    * that just died", PageRank's unsettled ranks). It may throw to
+    * comparison (sssp's (count, Σdist), CC's label sum, a shrinking
+    * set's size), or [[noneLeft]] for a count of what the new state
+    * still has to do (peeling's "nodes that just died", PageRank's
+    * unsettled ranks, BPE's words with a pair left). It may throw to
     * surface probe-integrity violations (e.g. a decimal overflow turning
-    * a sum NULL). */
+    * a sum NULL). A fixed schedule passes no metrics and a `same` that
+    * is always false: it runs exactly `maxRounds` rounds and reports
+    * `converged == false`. */
   def fixpointObservedBy(state0: DataFrame, maxRounds: Int)(
       step: (DataFrame, Int) => DataFrame)(
       metrics: Seq[org.apache.spark.sql.Column])(
       same: (Seq[Any], Seq[Any]) => Boolean): Fixpoint = {
     val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
     def observed(df: DataFrame): (DataFrame, Seq[Any]) = {
+      if (named.isEmpty) return (df.localCheckpoint(), Nil) // observe needs a column
       val obs = org.apache.spark.sql.Observation(
         s"graft_fixpoint_${obsId.incrementAndGet()}")
       val ckpt = df.observe(obs, named.head, named.tail: _*).localCheckpoint()

@@ -21,7 +21,7 @@ object Skew {
     * physical row position (monotonically_increasing_id encodes the
     * partition id in its high bits and a per-partition counter in the low
     * bits, so pmod spreads rows evenly within every partition). One
-    * definition — three call sites below must not drift. */
+    * definition — both call sites below must not drift. */
   private def saltCol(salt: Int): Column = pmod(monotonically_increasing_id(), lit(salt))
 
   private val SaltName = "__graft_salt"
@@ -35,26 +35,6 @@ object Skew {
       .groupBy(col("key"))
       .agg(sum("__partial").as("cnt"))
 
-  /** Salted sum over a long column (same two-phase shape). */
-  def saltedSum(df: DataFrame, key: Column, value: Column, salt: Int): DataFrame =
-    df.withColumn(SaltName, saltCol(salt))
-      .groupBy(key.as("key"), col(SaltName))
-      .agg(sum(value).as("__partial"))
-      .groupBy(col("key"))
-      .agg(sum("__partial").as("total"))
-
-  /** Salted equi-join for a skewed LEFT side against a small-but-not-
-    * broadcastable right side: the left's hot key is scattered across
-    * `salt` sub-keys (derived from the physical row position — no data
-    * column needed, deterministic within a run), and the right side is
-    * replicated once per salt value, so the hot key's rows spread over
-    * `salt` reduce tasks instead of stalling one. Row-multiset identical
-    * to `left.join(right, leftKey === rightKey)`.
-    *
-    * This is the MANUAL fallback for engines/plans where AQE's runtime
-    * skew-join split (demonstrated in PlanShapeSpec) can't apply — e.g. a
-    * skewed aggregate feeding the join in the same stage. Cost: right side
-    * ×salt (keep salt modest, 8–32). */
   /** Audit-DRIVEN automatic skew defense — closes the loop between the
     * detector ([[Maintenance.skewAuditOf]] / q_skew_audit, which flags
     * `salt_advised` when one key carries >1% of a table) and the manual
@@ -93,6 +73,18 @@ object Skew {
     else left.join(right, leftKey === rightKey)
   }
 
+  /** Salted equi-join for a skewed LEFT side against a small-but-not-
+    * broadcastable right side: the left's hot key is scattered across
+    * `salt` sub-keys (derived from the physical row position — no data
+    * column needed, deterministic within a run), and the right side is
+    * replicated once per salt value, so the hot key's rows spread over
+    * `salt` reduce tasks instead of stalling one. Row-multiset identical
+    * to `left.join(right, leftKey === rightKey)`.
+    *
+    * This is the MANUAL fallback for engines/plans where AQE's runtime
+    * skew-join split (demonstrated in PlanShapeSpec) can't apply — e.g. a
+    * skewed aggregate feeding the join in the same stage. Cost: right side
+    * ×salt (keep salt modest, 8–32). */
   def saltedJoin(
       left: DataFrame,
       right: DataFrame,

@@ -592,9 +592,9 @@ object TextOps {
       .select(col("freq"), expr("filter(split(w, ''), x -> x <> '')").as("syms"))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     // the per-round 1-row argmax collect IS the merge rule (driver state
-    // by definition); `exhausted` routes its emptiness into the probe
-    var exhausted = false
-    Iterate.fixpoint(start, rounds) { (types, r) =>
+    // by definition); the observed count of words that still hold a pair
+    // is 0 exactly when the next collect would come back empty
+    Iterate.fixpointObservedBy(start, rounds) { (types, r) =>
       val top = types
         .filter(size(col("syms")) >= 2)
         .select(
@@ -607,13 +607,13 @@ object TextOps {
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1)
         .collect()
-      if (top.isEmpty) { exhausted = true; types }
+      if (top.isEmpty) types // a seed with no pair at all
       else {
         val (a, b, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r + 1L, a, b, cnt))
         types.select(col("freq"), mergePass("syms", a, b).as("syms"))
       }
-    } { (_, _) => if (exhausted) 0L else 1L }
+    } (Seq(sum(when(size(col("syms")) >= 2, 1L).otherwise(0L))))(Iterate.noneLeft)
     merges.toSeq
   }
 
@@ -2316,7 +2316,7 @@ object TextOps {
     * SCHEDULE-shaped loop (it oscillates on bipartite structures and has
     * no monotone convergence measure), so both engines run exactly this
     * many rounds and compare the resulting labeling, the
-    * [[Iterate.fixpoint]] scaladoc's "fixed merge-round budget" case. */
+    * [[Iterate.fixpointObservedBy]] scaladoc's fixed-schedule case. */
   private[operators] val LpaRounds = 4
 
   /** COMMUNITY DETECTION by synchronous label propagation over the word
@@ -2348,7 +2348,7 @@ object TextOps {
       .select(col("src").as("node"))
       .distinct()
       .select(col("node"), col("node").as("lab"))
-    Iterate.fixpoint(labels0, LpaRounds) { (labels, _) =>
+    Iterate.fixpointObservedBy(labels0, LpaRounds) { (labels, _) =>
       edges
         .join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"), col("lab"))
@@ -2359,7 +2359,7 @@ object TextOps {
             Window.partitionBy("node").orderBy(col("cnt").desc, col("lab"))))
         .filter(col("rn") === 1)
         .select("node", "lab")
-    } { (_, _) => 1L } // fixed schedule: no convergence probe, run all rounds
+    } (Nil)((_, _) => false) // fixed schedule: no convergence probe, run all rounds
       .state
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -14,9 +14,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * therefore needs the batch function to be replay-safe, which this sink
   * gets two independent ways:
   *
-  *   1. a committed-batch-id marker table — a replayed batchId ≤ the
-  *      marker is skipped outright (the documented idempotent-sink
-  *      recipe from the Structured Streaming guide);
+  *   1. a committed-batch-id marker table ([[VersionedTable]]'s
+  *      `<table>_commits`) — a replayed batchId ≤ the marker is skipped
+  *      outright (the documented idempotent-sink recipe from the
+  *      Structured Streaming guide);
   *   2. the merge itself is IDEMPOTENT: latest-per-key by (ts, event_id)
   *      — re-applying the same batch reproduces the identical table, so
   *      even the crash window between data write and marker write (plain
@@ -31,21 +32,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * file-granular (Delta) or bucket-granular, same logical plan.
   */
 object UpsertSink {
-
-  private def commitsTable(table: String) = table + "_commits"
-
-  /** Highest batch id already applied to `table` (-1 when none). */
-  private[streaming] def committedBatch(s: SparkSession, table: String): Long = {
-    val t = commitsTable(table)
-    if (!s.catalog.tableExists(t)) -1L
-    else {
-      // another session (the stream's cloned one) may have appended since
-      // this session cached the relation — refresh before deciding
-      s.catalog.refreshTable(t)
-      val r = s.table(t).agg(max("batch_id")).collect().head
-      if (r.isNullAt(0)) -1L else r.getLong(0)
-    }
-  }
 
   /** Latest row per user_id under the (ts, event_id) order — the
     * deterministic SCD-1 "current state" reduction used for both the
@@ -64,7 +50,7 @@ object UpsertSink {
     * the spec so replay safety is testable without a crash harness. */
   private[streaming] def applyBatch(
       s: SparkSession, table: String, batch: DataFrame, batchId: Long): Unit = {
-    if (batchId <= committedBatch(s, table)) return // replayed batch: already applied
+    if (batchId <= VersionedTable.committedBatch(s, table)) return // replayed batch: already applied
     val incoming = latestPerKey(batch)
     val merged =
       if (!s.catalog.tableExists(table)) incoming
@@ -75,12 +61,7 @@ object UpsertSink {
     // drop the cached file listing — a reader holding the pre-overwrite
     // relation would chase deleted part files
     s.catalog.refreshTable(table)
-    val commit = s.createDataFrame(
-      java.util.List.of(Row(batchId)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(
-          "batch_id", org.apache.spark.sql.types.LongType))))
-    commit.write.mode(SaveMode.Append).saveAsTable(commitsTable(table))
+    VersionedTable.markCommitted(s, table, batchId)
   }
 
   /** Start the upsert stream: `events` rows (event_id, ts, user_id,

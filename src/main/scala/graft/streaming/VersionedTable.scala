@@ -42,11 +42,23 @@ object VersionedTable {
     val t = markerTable(table)
     if (!s.catalog.tableExists(t)) -1L
     else {
+      // another session (the stream's cloned one) may have appended since
+      // this session cached the relation — refresh before deciding
       s.catalog.refreshTable(t)
       val r = s.table(t).agg(max("batch_id")).collect().head
       if (r.isNullAt(0)) -1L else r.getLong(0)
     }
   }
+
+  /** Append `batchId` to `table`'s commit marker: the one write that
+    * makes a batch committed, shared with [[UpsertSink]]. */
+  private[streaming] def markCommitted(s: SparkSession, table: String, batchId: Long): Unit =
+    s.createDataFrame(
+      java.util.List.of(Row(batchId)),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(
+          "batch_id", org.apache.spark.sql.types.LongType))))
+      .write.mode(SaveMode.Append).saveAsTable(markerTable(table))
 
   /** The current COMMITTED snapshot — the version the marker names,
     * never a live table a crashed attempt may have half-advanced.
@@ -192,12 +204,7 @@ object VersionedTable {
       if (batchId <= committed) false // at-least-once replay, committed
       else {
         writeVersion(s, table, batchId, merge(current(s, table)))
-        s.createDataFrame(
-          java.util.List.of(Row(batchId)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(
-              "batch_id", org.apache.spark.sql.types.LongType))))
-          .write.mode(SaveMode.Append).saveAsTable(markerTable(table))
+        markCommitted(s, table, batchId)
         // retire versions beyond the window — enumerated from the CATALOG
         // (bounded by retain plus at most a crash-leaked orphan), never by
         // collecting the whole append-only marker log: per-commit cost stays

@@ -29,6 +29,13 @@ object GraftBridge {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
+  /** The builder this session's function registry holds under `name`, if
+    * any. */
+  def functionBuilder(
+      spark: SparkSession, name: String): Option[Seq[Expression] => Expression] =
+    spark.sessionState.functionRegistry
+      .lookupFunctionBuilder(catalyst.FunctionIdentifier(name))
+
   /** Record a DSv2 writer task's output in its task metrics, as Spark's
     * file sinks do through their stats tracker: a DataWriter has no such
     * hook, and the `OutputMetrics` setters are `private[spark]`. No-op

@@ -223,6 +223,24 @@ class NativeExprsSpec extends SparkSpec {
     assert(e.getMessage.contains("graft_cosine_sim"), s"unhelpful error: ${e.getMessage}")
   }
 
+  test("a second register keeps every builder in place and SQL calls still work") {
+    GraftFunctions.register(spark)
+    def builders = GraftFunctions.all.map { case (name, _, _) =>
+      org.apache.spark.sql.GraftBridge.functionBuilder(spark, name)
+    }
+    val first = builders
+    assert(first.forall(_.isDefined))
+    GraftFunctions.register(spark)
+    first.zip(builders).zip(GraftFunctions.all.map(_._1)).foreach { case ((a, b), name) =>
+      assert(b.get eq a.get, s"$name was re-registered")
+    }
+    val r = spark.sql(
+      "SELECT graft_dot_prod(array(1.0d, 2.0d), array(3.0d, 4.0d)), graft_normalize_ws(' A  b ')")
+      .collect().head
+    assert(r.getDouble(0) === 11.0)
+    assert(r.getString(1) === " a b ")
+  }
+
   test("GraftBloom: no false negatives, bounded false positives, order-independent build") {
     import org.apache.spark.sql.DataFrame
     def keysDf(ks: Seq[Long]): DataFrame =

@@ -2246,18 +2246,19 @@ class ExtrasSpec extends SparkSpec {
     val s0 = Seq(0L).toDF("v")
     val step = (st: org.apache.spark.sql.DataFrame, _: Int) =>
       st.select((col("v") + 1).as("v"))
-    // plain fixpoint reports the capped state honestly…
-    val fp = Iterate.fixpoint(s0, 3)(step)((_, _) => 1L)
+    val v = Seq(max(col("v")))
+    // the fixpoint reports the capped state honestly…
+    val fp = Iterate.fixpointObservedBy(s0, 3)(step)(v)((_, _) => false)
     assert(fp.rounds === 3 && !fp.converged)
     // …but requireConverged refuses to return it —
     // CC labels decide what gets DROPPED, so a half-propagated state
     // must never flow onward silently
     intercept[IllegalStateException] {
-      Iterate.fixpoint(s0, 3)(step)((_, _) => 1L).requireConverged
+      Iterate.fixpointObservedBy(s0, 3)(step)(v)((_, _) => false).requireConverged
     }
     // and a loop that does converge passes through with converged=true
-    val ok = Iterate.fixpoint(s0, 3)(step)((_, next) =>
-      if (next.head().getLong(0) >= 2L) 0L else 1L).requireConverged
+    val ok = Iterate.fixpointObservedBy(s0, 3)(step)(v)((_, next) =>
+      next.head.asInstanceOf[Number].longValue >= 2L).requireConverged
     assert(ok.converged && ok.rounds === 2)
   }
 

@@ -3,12 +3,12 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Unit coverage for the Observation-folded fixpoint variants' subtle
-  * paths (previously guarded only by the end-to-end oracle gate): the
-  * null-metric-on-empty-state branch, agreement with the two-argument
-  * probe shape on a multi-round peel, metric-order preservation in
-  * the state-summary variant, `same` throwing as an overflow
-  * surrogate, and the round-cap tripwire. */
+/** Unit coverage for the Observation-folded fixpoint's subtle paths
+  * (previously guarded only by the end-to-end oracle gate): the
+  * null-metric-on-empty-state branch, agreement with an in-JVM model
+  * of a multi-round peel, metric-order preservation in the
+  * state-summary shape, `same` throwing as an overflow surrogate, and
+  * the round-cap tripwire next to the no-metric fixed schedule. */
 class IterateSpec extends SparkSpec {
 
   test("observed fixpoint: a NULL metric over an empty round output reads as converged") {
@@ -32,13 +32,22 @@ class IterateSpec extends SparkSpec {
       st.filter(col("x") % 2 === 0).select((col("x") / 2).cast("long").as("x"))
     val observed = Iterate.fixpointObservedBy(seed, 20)((st, _) => step(st))(
       Seq(count(when(col("x") % 2 =!= 0, 1))))(Iterate.noneLeft).requireConverged
-    val classic = Iterate.fixpoint(seed, 20)((st, _) => step(st))(
-      (_, next) => next.filter(col("x") % 2 =!= 0).count()).requireConverged
-    assert(observed.rounds === classic.rounds)
+    // the reference: the same peel as a plain Scala loop with the
+    // two-argument probe (odd values in the new state), no Spark, no
+    // scaffold
+    var model: Seq[Long] = 1L to 8L
+    var modelRounds = 0
+    var more = true
+    while (more && modelRounds < 20) {
+      model = model.filter(_ % 2 == 0).map(_ / 2)
+      modelRounds += 1
+      more = model.exists(_ % 2 != 0)
+    }
+    assert(!more)
+    assert(observed.rounds === modelRounds)
     assert(observed.rounds === 4) // {1..8} -> {1..4} -> {1,2} -> {1} -> {}
-    assert(observed.state.collect().map(_.getLong(0)).sorted.toSeq ===
-      classic.state.collect().map(_.getLong(0)).sorted.toSeq)
-    assert(observed.converged && classic.converged)
+    assert(observed.state.collect().map(_.getLong(0)).sorted.toSeq === model.sorted)
+    assert(observed.converged)
   }
 
   test("state-summary fixpoint preserves metric order and handles a NULL sum on an empty seed") {
@@ -89,6 +98,13 @@ class IterateSpec extends SparkSpec {
       Iterate.fixpointObservedBy(seed, 3)((st, _) => st)(Seq(count(lit(1))))(
         Iterate.noneLeft).requireConverged
     }
+    // a fixed schedule (no metrics, `same` never true) runs exactly the
+    // cap and says it did not converge
+    val sched = Iterate.fixpointObservedBy(seed, 3)((st, _) =>
+      st.select((col("x") + 1).as("x")))(Nil)((_, _) => false)
+    assert(sched.rounds === 3 && !sched.converged)
+    assert(sched.state.collect().map(_.getLong(0)).toSeq === Seq(4L))
+    intercept[IllegalStateException](sched.requireConverged)
   }
 
   test("superseded round checkpoints are unpersisted; the final state survives") {

@@ -62,7 +62,7 @@ class UpsertSinkSpec extends SparkSpec {
 
     // simulate foreachBatch redelivery: re-apply an already-committed id
     // with DIFFERENT (poisoned) content — the marker must reject it
-    val committed = UpsertSink.committedBatch(spark, table)
+    val committed = VersionedTable.committedBatch(spark, table)
     assert(committed >= 0L)
     val poison = Seq((99L, ts(99), 1L, -1.0)).toDF("event_id", "ts", "user_id", "value")
     UpsertSink.applyBatch(spark, table, poison, batchId = committed)
@@ -78,7 +78,7 @@ class UpsertSinkSpec extends SparkSpec {
     assert(state(table) ===
       Map(1L -> (4L, 9.0), 2L -> (3L, 3.0), 3L -> (6L, 1.5)),
       "restart applies only the new file; stale event does not regress state")
-    assert(UpsertSink.committedBatch(spark, table) > committed,
+    assert(VersionedTable.committedBatch(spark, table) > committed,
       "restart advanced the committed marker")
   }
 }
