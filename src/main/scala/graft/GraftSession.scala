@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /** The one place a SparkSession is built. Every main, tool and spec
   * session starts here, so the confs a multi-query session needs cannot
@@ -73,10 +73,12 @@ object GraftSession {
     * shingle/doc caches) and the RDD-level leftovers the catalog cache
     * cannot see — fixpoint queries `localCheckpoint()` their final state,
     * and those blocks otherwise stay pinned until a GC a large heap
-    * rarely runs, competing with later queries' execution memory. */
+    * rarely runs, competing with later queries' execution memory. No
+    * caller reads a finished query's RDDs again, so their blocks go
+    * through [[GraftBridge.dropBlocks]]. */
   def reset(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(GraftBridge.dropBlocks)
   }
 
   /** Stop `spark` and forget it, so the next [[start]] in this JVM builds

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated analytics tables (TESTDATA.md).
   *
@@ -26,17 +27,64 @@ object Tables {
     * was a net LOSS and was reverted: per-query floors were within noise
     * on the pipelines it targeted (tokenize/shingle), while every
     * query gained an exchange per table (q1_pricing_summary 0 → 6.4 MB
-    * shuffled, q_join_card_est +29 MB) and queries that run driver-side
-    * jobs during construction (q_dedup_semantic's count + CC fixpoint,
-    * q_zorder_ranked's ntile boundaries) DOUBLED — each tiny job paid the
-    * extra shuffle. The parallelism these scans lose is already recovered
-    * downstream: every heavy pipeline exchanges within a few operators
-    * (the shingle window on `sh`, aggregate/join exchanges), so only the
-    * pre-exchange scan leg is single-task, and that leg measured cheap.
-    * At 100 TB splits come from row groups; OPTIMIZATION_r15.md C1 has
-    * the numbers. */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    * shuffled, q_join_card_est +29 MB) and queries that ran driver-side
+    * jobs during construction (q_dedup_semantic's count + CC fixpoint at
+    * the time, q_zorder_ranked's ntile boundaries) DOUBLED — each tiny
+    * job paid the extra shuffle. The parallelism these scans lose is
+    * already recovered downstream: every heavy pipeline exchanges within
+    * a few operators (the shingle window on `sh`, aggregate/join
+    * exchanges), so only the pre-exchange scan leg is single-task, and
+    * that leg measured cheap. At 100 TB splits come from row groups;
+    * OPTIMIZATION_r15.md C1 has the numbers.
+    *
+    * The parquet schema is MEMOIZED: inference reads footers in a Spark
+    * job (32–43 ms a load, fired while the caller is still building its
+    * DataFrame), so only a load whose key changed infers; every other
+    * load reads with `.schema(s)` and fires no job. The key is the
+    * path's leaf files — path, length and mtime, listed through the
+    * Hadoop `FileSystem` (no job) — plus the session's
+    * `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` confs, which
+    * decide the inferred types ([[NanosAsLong]] turns NANOS `ts` into
+    * LongType). A rewritten file is therefore re-inferred: the `events`
+    * ts generation changes between driver runs ([[normalizeTs]]), and a
+    * stale schema would misread it. One entry per path; a failed
+    * inference (or an unlistable path) is not memoized. */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path) // Spark raises its own missing-path error
+      case Some(key) =>
+        schemas.get(path) match {
+          case (`key`, schema) => spark.read.schema(schema).parquet(path)
+          case _ =>
+            val df = spark.read.parquet(path)
+            schemas.put(path, (key, df.schema))
+            df
+        }
+    }
+  }
+
+  /** Leaf files (path, length, mtime) and the session's parquet confs. */
+  private type SchemaKey = (Vector[(String, Long, Long)], Map[String, String])
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (SchemaKey, StructType)]()
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = Vector.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => return None }
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    Some((files.result(), confs))
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")

@@ -784,7 +784,11 @@ object Dedup {
     * holds one LongMap entry per DISTINCT node in the partition — the
     * same working-set class as a per-partition hash aggregate, sized by
     * `spark.sql.files.maxPartitionBytes`/shuffle partitioning like
-    * every other hash-backed stage. */
+    * every other hash-backed stage. When no component can cross
+    * partitions (every edge of a component in one partition, e.g. edges
+    * partitioned by a blocking key both endpoints share), the output is
+    * already EXACT: each node's root is its component minimum, no
+    * fixpoint needed ([[semDedupImpl]]). */
   private def contractLocal(p: DataFrame): DataFrame = {
     val ss = p.sparkSession
     import ss.implicits._
@@ -2802,10 +2806,13 @@ object Dedup {
     * (vec_id < k, nearest by (cos, -cid) — a pure function of the data,
     * so the DuckDB twin replays the assignment exactly); a production
     * run would swap in the k-means fit ([[Similarity.qIvfKmeans]]) with
-    * identical downstream plumbing. Component canonicalization reuses
-    * the [[ccLabelsFrom]] min-label fixpoint — within-cell duplicate
-    * components are dense, so O(diameter) rounds is the right CC
-    * variant. At test SFs k stays 16, so results are SF-stable.
+    * identical downstream plumbing. Components need no fixpoint: every
+    * edge joins two vectors of the SAME cell, so every component lies
+    * inside one cell, and with the edges repartitioned by cell one
+    * partition holds all of a cell's edges — [[contractLocal]]'s
+    * per-partition union-find then returns the exact (component min,
+    * node) labels in the same plan, with no checkpoint or round job.
+    * At test SFs k stays 16, so results are SF-stable.
     *
     * Assignment is the join-based [[assignCells]] — k adapts to the
     * corpus, so unlike the fixed-k=16 IVF queries it must NOT collect
@@ -2828,14 +2835,16 @@ object Dedup {
       .join(assigned.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .select(
+        col("a.cell").as("cell"),
         col("a.vec_id").as("da"),
         col("b.vec_id").as("db"),
         pround(graft.functions.NativeExprs.cosineSim(col("a.v"), col("b.v")), 6).as("cos"))
       .filter(col("cos") >= SemBar)
-      .select("da", "db")
-    val drops = ccLabelsFrom(edges)
-      .filter(col("id") =!= col("label"))
-      .select(col("id").as("vec_id"))
+    // components cannot cross cells, so one cell per partition makes the
+    // local union-find's (root = component min, node) rows exact labels
+    val drops = contractLocal(edges.repartition(col("cell")).select("da", "db"))
+      .filter(col("da") =!= col("db"))
+      .select(col("db").as("vec_id"))
     assigned
       .join(drops, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"))

@@ -44,7 +44,7 @@ private[operators] object Iterate {
   private def dropCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
+        org.apache.spark.sql.GraftBridge.dropBlocks(r.rdd)
       case _ => ()
     }
 

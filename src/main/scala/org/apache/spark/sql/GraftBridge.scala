@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * standard shim every Spark-extension library ships: one file inside the
   * org.apache.spark.sql package, nothing else reaches into internals.
   * It also reaches the `private[spark]` task output metrics a DSv2 writer
-  * needs ([[reportOutput]]).
+  * needs ([[reportOutput]]) and the context's block removal ([[dropBlocks]]).
   */
 object GraftBridge {
   /** Re-export of the `private[sql]` AbstractDataType so graft expressions
@@ -46,4 +46,11 @@ object GraftBridge {
       m.setBytesWritten(bytes)
       m.setRecordsWritten(records)
     }
+
+  /** Free the blocks backing `rdd` (non-blocking) without `RDD.unpersist`,
+    * which WARNs for every locally checkpointed RDD that it cannot be
+    * recomputed afterwards. That is why only an RDD no caller reads again
+    * may be dropped. */
+  def dropBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,6 +23,33 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the call site (result-stage name, e.g. `count at
+    * Dedup.scala:123`) of every Spark job it started, in start order. The
+    * listener bus is asynchronous, so a marked sentinel job runs after
+    * `body`: once the listener sees it, every earlier start has arrived. */
+  def jobsStartedBy[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val marker = "graft.spec.sentinel"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null)
+          sentinelSeen.countDown()
+        else sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the sentinel job")
+      (r, sites.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Drop a versioned-snapshot table family (state, marker log, version
     * snapshots) from the catalog AND the warehouse dir, lock files

@@ -2112,28 +2112,15 @@ class ExtrasSpec extends SparkSpec {
       s"${r.getString(0)}: t-closeness and k-anonymity disagree on n_groups"))
   }
 
-  test("semantic dedup at forced k>16 / multi-chunk assignment stays literal-free") {
-    // The 100 TB claim for qSemDedup: k adapts to the corpus, so the
-    // centroid assignment must be a JOIN against centroid data, not a
-    // driver collect + codegen literal chain. This forces both failure
-    // modes the old shape had: k > SemMinCells (targetCell=4 → k=30 on a
-    // 120-vector corpus) and k > one chunk (centChunk=8 → 4 chunk joins),
-    // and cross-checks the full query against an in-JVM union-find truth.
-    val dim = 4
-    val nv = 120
-    // 3 well-separated directions + deterministic jitter → real dup pairs
-    def vecOf(id: Long): Array[Float] = {
-      val a = Array.fill(dim)(0.0f)
-      val g = (id % 3).toInt
-      a(g) = 1.0f
-      a((g + 1) % dim) = (0.05 * ((id / 3) % 5)).toFloat
-      a(3) = (0.01 * (id % 7)).toFloat
-      a
-    }
+  /** Writes `vecs` as an embeddings table; returns its dir and the rows
+    * semantic dedup at `targetCell` must keep, from an in-JVM union-find. */
+  private def semCorpus(
+      vecs: IndexedSeq[(Long, Array[Float])], targetCell: Int): (String, Set[(Long, Long)]) = {
+    val nv = vecs.size
     val tmp = java.nio.file.Files.createTempDirectory("graft-semk-").toString
     locally {
       import spark.implicits._
-      (0L until nv).map(id => (id, vecOf(id).toSeq)).toDF("vec_id", "embedding")
+      vecs.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
         .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     }
     // in-JVM truth, mirroring CosineSim's accumulation order on the
@@ -2146,9 +2133,7 @@ class ExtrasSpec extends SparkSpec {
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
-    val vecs = (0L until nv).map(id => id -> vecOf(id))
-    val k = math.max(16, (nv + 3) / 4) // targetCell = 4
-    assert(k == 30, "spec must force k beyond SemMinCells")
+    val k = math.max(16, (nv + targetCell - 1) / targetCell)
     val cents = vecs.filter(_._1 < k)
     def cellOf(v: Array[Float]): Long = {
       var best = -1L; var bestCos = Double.NegativeInfinity
@@ -2176,7 +2161,57 @@ class ExtrasSpec extends SparkSpec {
     val expected = vecs.map(_._1).filter(id => find(id) == id)
       .map(id => (id, cells(id))).toSet
     assert(expected.size < nv, "no semantic duplicates planted — test is vacuous")
+    (tmp, expected)
+  }
 
+  /** A 120-vector corpus that forces semantic dedup to k=30 cells at
+    * targetCell=4. */
+  private lazy val forcedKCorpus: (String, Set[(Long, Long)]) = {
+    val dim = 4
+    val nv = 120
+    assert(math.max(16, (nv + 3) / 4) == 30, "spec must force k beyond SemMinCells")
+    // 3 well-separated directions + deterministic jitter → real dup pairs
+    def vecOf(id: Long): Array[Float] = {
+      val a = Array.fill(dim)(0.0f)
+      val g = (id % 3).toInt
+      a(g) = 1.0f
+      a((g + 1) % dim) = (0.05 * ((id / 3) % 5)).toFloat
+      a(3) = (0.01 * (id % 7)).toFloat
+      a
+    }
+    semCorpus((0L until nv).map(id => id -> vecOf(id)), 4)
+  }
+
+  /** 16 cells (k=16 at targetCell=512), each a path-shaped component
+    * whose middle id has no smaller neighbour: centroid g sits at angle
+    * 0° of its own plane (axes 2g, 2g+1), and nodes 16+3g, 18+3g, 17+3g
+    * at -40°, 20° and 80°. Edges (cos ≥ 0.3): g–(16+3g), g–(18+3g),
+    * (16+3g)–(18+3g) and (17+3g)–(18+3g) only, so 17+3g learns its
+    * component minimum g only if its one edge meets the rest of its
+    * component in one union-find. Only the 16 centroids survive. */
+  private lazy val pathCorpus: (String, Set[(Long, Long)]) = {
+    def at(g: Int, deg: Double): Array[Float] = {
+      val a = Array.fill(32)(0.0f)
+      a(2 * g) = math.cos(math.toRadians(deg)).toFloat
+      a(2 * g + 1) = math.sin(math.toRadians(deg)).toFloat
+      a
+    }
+    val corpus = semCorpus((0 until 16).flatMap { g =>
+      Seq(g.toLong -> at(g, 0), (16L + 3 * g) -> at(g, -40), (17L + 3 * g) -> at(g, 80),
+        (18L + 3 * g) -> at(g, 20))
+    }.sortBy(_._1), 512)
+    assert(corpus._2 === (0L until 16L).map(g => (g, g)).toSet, "path corpus geometry drifted")
+    corpus
+  }
+
+  test("semantic dedup at forced k>16 / multi-chunk assignment stays literal-free") {
+    // The 100 TB claim for qSemDedup: k adapts to the corpus, so the
+    // centroid assignment must be a JOIN against centroid data, not a
+    // driver collect + codegen literal chain. This forces both failure
+    // modes the old shape had: k > SemMinCells (targetCell=4 → k=30 on a
+    // 120-vector corpus) and k > one chunk (centChunk=8 → 4 chunk joins),
+    // and cross-checks the full query against an in-JVM union-find truth.
+    val (tmp, expected) = forcedKCorpus
     val got = Dedup.semDedupImpl(spark, tmp, 4, 8).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === expected,
@@ -2198,6 +2233,55 @@ class ExtrasSpec extends SparkSpec {
     val p30 = Dedup.assignCells(e, 30, 65536).queryExecution.executedPlan.toString
     assert(math.abs(p30.length - p16.length) < 200,
       s"plan grew with k (${p16.length} -> ${p30.length} chars) — literal chain is back")
+  }
+
+  test("semantic dedup's per-cell union-find matches the truth at 1 and 8 shuffle partitions") {
+    // Components come from ONE partition-local union-find over edges
+    // repartitioned by cell, no fixpoint. At 1 shuffle partition all
+    // cells share one union-find; at 8 the cells spread over partitions,
+    // so a label is exact only if every cell's edges meet in one. The
+    // forced-k corpus has 30 cells of clique-like components; the path
+    // corpus has a node per cell whose only edge goes to a larger id,
+    // which a partitioning that splits a cell's edges labels wrongly.
+    // Coalescing is off so the partition count is the one asked for.
+    val confs = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      for {
+        (name, (tmp, expected), targetCell, centChunk) <-
+          Seq(("forced-k", forcedKCorpus, 4, 8), ("path", pathCorpus, 512, 65536))
+        parts <- Seq(1, 8)
+      } {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        spark.catalog.clearCache() // a fresh cached assignment per layout
+        val got = Dedup.semDedupImpl(spark, tmp, targetCell, centChunk).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got === expected,
+          s"$name, $parts partitions: ${got.size} kept vs ${expected.size} expected")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("building semantic dedup fires only the k-sizing count, no checkpoint") {
+    // the construction layer: with the parquet schema memo warm, the
+    // only driver job left is the row count that sizes k — no CC
+    // fixpoint rounds and no localCheckpoint (their blocks would show as
+    // new persistent RDDs, their plans as LogicalRDD leaves)
+    val (_, countJobs) = jobsStartedBy(graft.Tables.embeddings(spark, sfDir).count())
+    spark.catalog.clearCache()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (df, jobs) = jobsStartedBy(Dedup.qSemDedup(spark, sfDir))
+    assert(countJobs.nonEmpty && jobs.size === countJobs.size,
+      s"construction jobs beyond the count's $countJobs: $jobs")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted,
+      "construction persisted RDD blocks")
+    assert(df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }.isEmpty, s"checkpointed relation in the plan:\n${df.queryExecution.analyzed}")
   }
 
   test("vocab drift: hand-computed χ² terms on a planted 2-source corpus; ×10-replication invariant") {

@@ -133,7 +133,8 @@ class IterateSpec extends SparkSpec {
     // and the survivor is the final state, still fully readable
     assert(fp.converged && fp.state.count() === 0)
     fp.state.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.sql.GraftBridge.dropBlocks(r.rdd)
       case _ => ()
     }
   }

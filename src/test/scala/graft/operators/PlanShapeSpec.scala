@@ -722,15 +722,43 @@ class PlanShapeSpec extends SparkSpec {
     // equi-join) and never degenerate to a cartesian / nested-loop over
     // the corpus. The ONE nested-loop join allowed is the centroid
     // assignment's 1-row broadcast-array crossJoin (fan-out exactly 1 per
-    // corpus row) — at test SF k=16 fits a single chunk, so exactly one.
-    val p = plan(Dedup.qSemDedup(spark, sfDir))
-    assert(!p.contains("CartesianProduct"), s"cartesian appeared:\n$p")
-    // AQE prints Final + Initial copies — count in the final section only
-    val bnlj = "BroadcastNestedLoopJoin".r
-      .findAllIn(p.split("== Initial Plan ==").head).size
-    assert(bnlj == 1,
-      s"expected exactly the 1-row centroid crossJoin, saw $bnlj nested-loop joins:\n$p")
-    assert(p.contains("cell"), s"cell blocking key missing from the plan:\n$p")
+    // corpus row) — at test SF k=16 fits a single chunk, so exactly one,
+    // inside the cached assignment. The plan prints that cached relation
+    // once per reader (both self-join sides and the survivor anti-join),
+    // so count per distinct cached relation, not in the plan text.
+    // Components come from edges repartitioned by cell in the same plan:
+    // exactly one REPARTITION_BY_COL exchange on `cell`, no checkpoint.
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    object H extends AdaptiveSparkPlanHelper
+    val df = Dedup.qSemDedup(spark, sfDir)
+    val top = df.queryExecution.executedPlan
+    val p = top.toString
+    val cached = H.collect(top) { case s: InMemoryTableScanExec => s.relation.cacheBuilder }.distinct
+    assert(cached.size == 1, s"expected one cached assignment, saw ${cached.size}:\n$p")
+    def count(plan: SparkPlan)(f: PartialFunction[SparkPlan, Unit]) = H.collect(plan)(f).size
+    val bnljInCache = count(cached.head.cachedPlan) { case _: BroadcastNestedLoopJoinExec => }
+    assert(bnljInCache == 1,
+      s"expected exactly the 1-row centroid crossJoin, saw $bnljInCache nested-loop joins:\n$p")
+    assert(count(top) { case _: BroadcastNestedLoopJoinExec => } == 0,
+      s"nested-loop join outside the cached assignment:\n$p")
+    for (plan <- Seq(top, cached.head.cachedPlan))
+      assert(count(plan) { case _: CartesianProductExec => } == 0, s"cartesian appeared:\n$p")
+    val byCell = H.collect(top) {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e.outputPartitioning
+    }
+    assert(byCell.size == 1 && (byCell.head match {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "cell"
+      case _ => false
+    }), s"expected one repartition of the edges by cell, saw $byCell:\n$p")
+    assert(df.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }.isEmpty, s"checkpointed relation in the plan:\n${df.queryExecution.analyzed}")
   }
 
   test("item-CF pairs only through the basket equi-join; top-3 cut below the sort") {
