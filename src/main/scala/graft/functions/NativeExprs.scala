@@ -380,14 +380,9 @@ case class LineTokens(child: Expression, suffix: String)
   override def prettyName: String = "graft_line_tokens"
 }
 
-/** The MapReduce engine's line→KV rule in one pass over the UTF-8 bytes,
-  * after the reference's `iss >> key` (partition.cpp:30-31,
-  * reduce.cpp:23-27): leading [[NativeExprs.isWs]] skipped, key = the
-  * first token, value = the rest after the whitespace run that ends the
-  * key (empty when there is none; trailing whitespace kept). A line with
-  * no non-whitespace byte yields NULL — the reference's extraction fails
-  * on it and emits nothing. On other lines ≡
-  * `split(regexp_replace(line, "^\\s+", ""), "\\s+", 2)`. */
+/** The MapReduce engine's line→KV rule as a Catalyst expression: the
+  * engine's split of each text-scan line ([[graft.engine.Engine.plan]]).
+  * The rule itself is [[LineKv.kernel]]. */
 case class LineKv(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[org.apache.spark.sql.GraftBridge.AbstractDT] = Seq(StringType)
   override def dataType: DataType = StructType(Seq(
@@ -395,6 +390,39 @@ case class LineKv(child: Expression) extends UnaryExpression with ExpectsInputTy
     StructField("value", StringType, nullable = false)))
   override def nullable: Boolean = true
 
+  // not nullSafeCodeGen: that pins isNull to the child's, and a non-null
+  // line can still yield NULL here
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val in = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${in.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        ${in.isNull} ? null : ${classOf[LineKv].getName}.kernel(${in.value});
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    LineKv.kernel(input.asInstanceOf[UTF8String])
+
+  override protected def withNewChildInternal(newChild: Expression): LineKv =
+    copy(child = newChild)
+  override def prettyName: String = "graft_line_kv"
+}
+
+object LineKv {
+
+  /** The one line→KV rule, in one pass over a line's UTF-8 bytes, after
+    * the reference's `iss >> key` (partition.cpp:30-31,
+    * reduce.cpp:23-27): leading [[NativeExprs.isWs]] skipped, key = the
+    * first token, value = the rest after the whitespace run that ends the
+    * key (empty when there is none; trailing whitespace kept). A line with
+    * no non-whitespace byte yields null — the reference's extraction
+    * fails on it and emits nothing. On other lines ≡
+    * `split(regexp_replace(line, "^\\s+", ""), "\\s+", 2)`. Bytes are
+    * copied out (`slice`), never decoded, so malformed UTF-8 passes
+    * through unchanged and `s` may be a reused buffer. Two callers: the
+    * generated code of the [[LineKv]] expression (the engine path) and
+    * the `graft-kv` reader ([[graft.sources.KvDirSource]]). */
   def kernel(s: UTF8String): InternalRow = {
     val n = s.numBytes
     var i = 0
@@ -406,24 +434,6 @@ case class LineKv(child: Expression) extends UnaryExpression with ExpectsInputTy
     while (i < n && NativeExprs.isWs(s.getByte(i))) i += 1
     InternalRow(key, NativeExprs.slice(s, i, n))
   }
-
-  // not nullSafeCodeGen: that pins isNull to the child's, and a non-null
-  // line can still yield NULL here
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lineKvExpr", this, classOf[LineKv].getName)
-    val in = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${in.code}
-      ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        ${in.isNull} ? null : $ref.kernel(${in.value});
-      boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-
-  override protected def nullSafeEval(input: Any): Any = kernel(input.asInstanceOf[UTF8String])
-
-  override protected def withNewChildInternal(newChild: Expression): LineKv =
-    copy(child = newChild)
-  override def prettyName: String = "graft_line_kv"
 }
 
 /** One-pass text statistics used by token-count and quality scoring:

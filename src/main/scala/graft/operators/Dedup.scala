@@ -170,7 +170,7 @@ object Dedup {
     // Deterministic pure function of the corpus → identical to
     // recomputing; cross-JVM reusable via the fingerprint marker.
     val t = graft.sources.Warehouse.tableName("graft_neardup_edges", d)
-    graft.sources.Warehouse.ensure(s, t, "da", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensure(s, t, "da", srcDir = d) {
       val (_, sizes, pairs) = shinglePairs(s, d, minInter = 1)
       withEndpointSizes(pairs, sizes)
         .filter(col("inter") / (col("na") + col("nb") - col("inter")) >= NearDupBar)
@@ -454,16 +454,16 @@ object Dedup {
       .select(col("doc_id"), explode(shingles(col("text"))).as("sh"))
       .cache()
     try {
-      Warehouse.ensure(s, dfT, "sh", reuseFrom = Some(d)) {
+      Warehouse.ensure(s, dfT, "sh", srcDir = d) {
         corpusSh.groupBy("sh").agg(count(lit(1)).as("df_c"))
       }
-      Warehouse.ensure(s, shT, "sh", reuseFrom = Some(d)) {
+      Warehouse.ensure(s, shT, "sh", srcDir = d) {
         corpusSh.join(s.table(dfT).filter(col("df_c") <= IncMaxDF).select("sh"), "sh")
       }
-      Warehouse.ensure(s, szT, "doc_id", reuseFrom = Some(d)) {
+      Warehouse.ensure(s, szT, "doc_id", srcDir = d) {
         s.table(shT).groupBy("doc_id").agg(count(lit(1)).as("n_c"))
       }
-      Warehouse.ensure(s, fpT, "f", reuseFrom = Some(d)) {
+      Warehouse.ensure(s, fpT, "f", srcDir = d) {
         Tables.documents(s, d)
           .filter(!isNewBatch(col("doc_id")))
           .select(fingerprint(col("text")).as("f"))
@@ -660,7 +660,7 @@ object Dedup {
   private def ensureRefreshBase(s: SparkSession, d: String): String = {
     import graft.functions.NativeExprs.tokens
     val tbl = graft.sources.Warehouse.tableName("graft_refresh_base", d)
-    graft.sources.Warehouse.ensureVia(s, tbl, reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensureVia(s, tbl, srcDir = d) {
       Tables.documents(s, d)
         .filter(!isNewBatch(col("doc_id")))
         .select(col("source"), size(tokens(col("text"))).cast("long").as("n_tokens"))
@@ -744,7 +744,7 @@ object Dedup {
     // per-source report / size histogram are views over the stored
     // (id, label) table and cannot disagree.
     val t = graft.sources.Warehouse.tableName("graft_cc_labels", d)
-    graft.sources.Warehouse.ensure(s, t, "id", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensure(s, t, "id", srcDir = d) {
       ccLabelsFrom(nearDupEdges(s, d))
     }
     s.table(t)
@@ -1180,7 +1180,7 @@ object Dedup {
     import graft.sources.Warehouse
     val t = Warehouse.tableName("graft_inc_cc", d)
     val (shT, _, szT, _) = ensureIncrementalIndex(s, d)
-    Warehouse.ensure(s, t, "id", reuseFrom = Some(d)) {
+    Warehouse.ensure(s, t, "id", srcDir = d) {
       val idx = s.table(shT)
       val pairs = idx.as("a")
         .join(
@@ -1359,7 +1359,7 @@ object Dedup {
     // the near-dup ∪ exact-dup edge union — a different graph than
     // ccLabels'), build-once like the clustering job's labels
     val labT = graft.sources.Warehouse.tableName("graft_cc_split_labels", d)
-    graft.sources.Warehouse.ensure(s, labT, "id", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensure(s, labT, "id", srcDir = d) {
       ccLabelsFrom(nearDupEdges(s, d).union(exactEdges))
     }
     val labels = s.table(labT).withColumnRenamed("id", "doc_id")
@@ -1710,7 +1710,7 @@ object Dedup {
     * models; cross-JVM reusable via the fingerprint marker. */
   private def ensurePipelineFlags(s: SparkSession, d: String): String = {
     val t = graft.sources.Warehouse.tableName("graft_pipe_flags", d)
-    graft.sources.Warehouse.ensure(s, t, "doc_id", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensure(s, t, "doc_id", srcDir = d) {
       val (nearDrops, exactDrops, contaminated, lowQuality) = pipelineDrops(s, d)
       // each drop subtree planned ONCE: tag with one-hot flag columns,
       // union, and max-reduce per doc — one shuffle, no re-join of the
@@ -2450,16 +2450,16 @@ object Dedup {
     val triT = Warehouse.tableName("graft_ctx_tri", d)
     val dfT = Warehouse.tableName("graft_ctx_df", d)
     val snT = Warehouse.tableName("graft_ctx_snip", d)
-    Warehouse.ensure(s, triT, "sh", reuseFrom = Some(d)) {
+    Warehouse.ensure(s, triT, "sh", srcDir = d) {
       explodedShingles(s, d)
     }
     // df and the capped snippet set both derive from the STORED tri /
     // df tables — the build chain tokenizes the corpus once for tri and
     // once for the snippet prefixes, then never again
-    Warehouse.ensure(s, dfT, "sh", reuseFrom = Some(d)) {
+    Warehouse.ensure(s, dfT, "sh", srcDir = d) {
       s.table(triT).groupBy("sh").agg(count(lit(1)).as("df"))
     }
-    Warehouse.ensure(s, snT, "sh", reuseFrom = Some(d)) {
+    Warehouse.ensure(s, snT, "sh", srcDir = d) {
       Tables.documents(s, d)
         .filter(size(toks(col("text"))) >= 3)
         .select(

@@ -55,7 +55,7 @@ object Maintenance {
   /** Build-once persisted corpus partials (the nightly stats job). */
   private[operators] def ensureStatsPartials(s: SparkSession, d: String): String = {
     val t = Warehouse.tableName("graft_stats_part", d)
-    Warehouse.ensure(s, t, "source", nBuckets = 4) {
+    Warehouse.ensure(s, t, "source", nBuckets = 4, srcDir = d) {
       partials(Tables.documents(s, d).filter(!isNewBatch(col("doc_id"))))
     }
     t
@@ -100,7 +100,7 @@ object Maintenance {
     * "thousand tiny ingest files" state every streaming sink produces. */
   private[operators] def ensureFragmented(s: SparkSession, d: String): String = {
     val t = Warehouse.tableName("graft_frag", d)
-    Warehouse.ensure(s, t, "doc_id", nBuckets = 1) {
+    Warehouse.ensure(s, t, "doc_id", nBuckets = 1, srcDir = d) {
       Tables.documents(s, d).repartition(64)
     }
     t
@@ -115,7 +115,7 @@ object Maintenance {
   private[operators] def ensureCompacted(s: SparkSession, d: String): String = {
     val t = Warehouse.tableName("graft_compact", d)
     val frag = ensureFragmented(s, d)
-    Warehouse.ensureVia(s, t) {
+    Warehouse.ensureVia(s, t, srcDir = d) {
       s.table(frag)
         .repartitionByRange(2, col("doc_id"))
         .sortWithinPartitions("doc_id")
@@ -627,7 +627,7 @@ object Maintenance {
     * view-refresh job's output). */
   private[operators] def ensureMvRevenue(s: SparkSession, d: String): String = {
     val t = Warehouse.tableName("graft_mv_rev", d)
-    Warehouse.ensure(s, t, "n_name", nBuckets = 4) {
+    Warehouse.ensure(s, t, "n_name", nBuckets = 4, srcDir = d) {
       mvRevPartials(s, d, newBatch = false)
     }
     t
@@ -676,7 +676,7 @@ object Maintenance {
     * insert path. */
   def qMvRetract(s: SparkSession, d: String): DataFrame = {
     val t = Warehouse.tableName("graft_mv_rev_full", d)
-    Warehouse.ensure(s, t, "n_name", nBuckets = 4) {
+    Warehouse.ensure(s, t, "n_name", nBuckets = 4, srcDir = d) {
       // the nightly full-view partials this daily retraction maintains:
       // corpus + batch slices = the whole fact table, built ONCE
       mvRevPartials(s, d, newBatch = false)
@@ -756,7 +756,7 @@ object Maintenance {
 
   private[operators] def ensureQtyHist(s: SparkSession, d: String): String = {
     val t = Warehouse.tableName("graft_hist_qty", d)
-    Warehouse.ensure(s, t, "l_returnflag", nBuckets = 2) {
+    Warehouse.ensure(s, t, "l_returnflag", nBuckets = 2, srcDir = d) {
       qtyHist(Tables.lineitem(s, d).filter(!isNewOrderBatch(col("l_orderkey"))))
     }
     t

@@ -142,7 +142,7 @@ object Multimodal {
   private def mediaTable(s: SparkSession, d: String, prefix: String)(
       encode: Long => Array[Byte]): DataFrame = {
     val tbl = graft.sources.Warehouse.tableName(prefix, d)
-    graft.sources.Warehouse.ensure(s, tbl, "doc_id") {
+    graft.sources.Warehouse.ensure(s, tbl, "doc_id", srcDir = d) {
       import s.implicits._
       Tables.documents(s, d)
         .select(col("doc_id"))

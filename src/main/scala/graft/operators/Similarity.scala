@@ -317,7 +317,7 @@ object Similarity {
         // recomputing — and the probe below reads only its probed
         // buckets
         val tbl = graft.sources.Warehouse.tableName("graft_ivf", d)
-        graft.sources.Warehouse.ensurePartitioned(s, tbl, "cell", reuseFrom = Some(d)) {
+        graft.sources.Warehouse.ensurePartitioned(s, tbl, "cell", srcDir = d) {
           e.withColumn("cell", nearestCell(cents, col("v")))
         }
         val probes = probeCells(cents, qvec, IvfProbes)
@@ -381,7 +381,7 @@ object Similarity {
       .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).map(_.toDouble)))
       .sortBy(_._1)
     val tbl = graft.sources.Warehouse.tableName("graft_ivf_base", d)
-    graft.sources.Warehouse.ensurePartitioned(s, tbl, "cell", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensurePartitioned(s, tbl, "cell", srcDir = d) {
       e.filter(!isBatch).withColumn("cell", nearestCell(cents, col("v")))
     }
     (tbl, cents)
@@ -590,14 +590,14 @@ object Similarity {
     import graft.sources.Warehouse
     val ctT = Warehouse.tableName("graft_km_cents", d)
     val asT = Warehouse.tableName("graft_km_cells", d)
-    Warehouse.ensureVia(s, ctT, reuseFrom = Some(d)) {
+    Warehouse.ensureVia(s, ctT, srcDir = d) {
       val cents = kmeansCentroids(e, IvfCells, KmeansIters)
       val rows = for { (cid, cv) <- cents.toSeq; (mu, pos) <- cv.zipWithIndex }
         yield (cid, pos, mu)
       import s.implicits._
       rows.toDF("cell", "pos", "mu").coalesce(1).write.saveAsTable(ctT)
     }
-    Warehouse.ensurePartitioned(s, asT, "cell", reuseFrom = Some(d)) {
+    Warehouse.ensurePartitioned(s, asT, "cell", srcDir = d) {
       e.withColumn("cell", nearestCell(loadCentroids(s, ctT), col("v")))
     }
     (ctT, asT)
@@ -748,7 +748,7 @@ object Similarity {
     import graft.sources.Warehouse
     val cbT = Warehouse.tableName("graft_pq_cb", d)
     val cdT = Warehouse.tableName("graft_pq_codes", d)
-    Warehouse.ensureVia(s, cbT, reuseFrom = Some(d)) {
+    Warehouse.ensureVia(s, cbT, srcDir = d) {
       val books = pqCodebooks(e)
       val rows = for {
         (m, cb) <- books.toSeq
@@ -758,7 +758,7 @@ object Similarity {
       import s.implicits._
       rows.toDF("m", "code", "pos", "mu").coalesce(1).write.saveAsTable(cbT)
     }
-    Warehouse.ensure(s, cdT, "vec_id", reuseFrom = Some(d)) {
+    Warehouse.ensure(s, cdT, "vec_id", srcDir = d) {
       val books = loadPqBooks(s, cbT)
       val codes = array((0 until PqSubspaces).map(m =>
         nearestCode(books(m), slice(col("vn"), m * PqSubDim + 1, PqSubDim))): _*)
@@ -1116,7 +1116,7 @@ object Similarity {
     * the wide vector column is read only for stage-2 candidates. */
   def qHybridSearch(s: SparkSession, d: String): DataFrame = {
     val kwT = graft.sources.Warehouse.tableName("graft_kw", d)
-    graft.sources.Warehouse.ensure(s, kwT, "term", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensure(s, kwT, "term", srcDir = d) {
       TextOps.qTfidf(s, d).select(col("doc_id"), col("term"))
     }
     val kw = s.table(kwT)
@@ -1306,7 +1306,7 @@ object Similarity {
     * per query). */
   private def pcaComponentOf(s: SparkSession, d: String): Array[Long] = {
     val tbl = graft.sources.Warehouse.tableName("graft_pca_comp", d)
-    graft.sources.Warehouse.ensureVia(s, tbl, reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensureVia(s, tbl, srcDir = d) {
       import s.implicits._
       val comp = fitPcaComponent(s, d)
       comp.indices.map(i => ((i + 1).toLong, comp(i)))

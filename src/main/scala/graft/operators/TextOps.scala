@@ -754,7 +754,7 @@ object TextOps {
     * + the prefix check). */
   private def ensureBpeFullMerges(s: SparkSession, d: String): String = {
     val tbl = graft.sources.Warehouse.tableName("graft_bpe_merges", d)
-    graft.sources.Warehouse.ensureVia(s, tbl, reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensureVia(s, tbl, srcDir = d) {
       val types = Tables.documents(s, d)
         .select(explode(graft.functions.NativeExprs.tokens(col("text"))).as("w"))
         .groupBy("w")
@@ -847,7 +847,7 @@ object TextOps {
     * against the stored table — no per-query retrain. */
   private def ensureBpePieces(s: SparkSession, d: String): String = {
     val tbl = graft.sources.Warehouse.tableName("graft_bpe_pieces", d)
-    graft.sources.Warehouse.ensureVia(s, tbl, reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensureVia(s, tbl, srcDir = d) {
       val types0 = Tables.documents(s, d)
         .select(explode(graft.functions.NativeExprs.tokens(col("text"))).as("w"))
         .groupBy("w")
@@ -1139,7 +1139,7 @@ object TextOps {
       unigramTrainCollected(types, seed, UnigramTargetMulti)
     }
     import s.implicits._
-    graft.sources.Warehouse.ensureVia(s, vocabTbl, reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensureVia(s, vocabTbl, srcDir = d) {
       res.vocab.zipWithIndex
         .map { case ((p, c), i) =>
           (i + 1L, p, c, p.codePointCount(0, p.length) == 1)
@@ -1147,7 +1147,7 @@ object TextOps {
         .toDF("rank", "piece", "cnt", "is_char")
         .coalesce(1).write.saveAsTable(vocabTbl)
     }
-    graft.sources.Warehouse.ensureVia(s, piecesTbl, reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensureVia(s, piecesTbl, srcDir = d) {
       res.typePieces.toSeq.toDF("w", "n_sub")
         .coalesce(1).write.saveAsTable(piecesTbl)
     }
@@ -1506,7 +1506,7 @@ object TextOps {
     // card probe the stored (doc_id, n_trigrams, n_backoff,
     // score_sum_ppm) table. Deterministic pure function of the corpus.
     val tbl = graft.sources.Warehouse.tableName("graft_lm_scores", d)
-    graft.sources.Warehouse.ensure(s, tbl, "doc_id", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensure(s, tbl, "doc_id", srcDir = d) {
       lmDocScoresBuild(s, d)
     }
     s.table(tbl)
@@ -2844,7 +2844,7 @@ object TextOps {
     * prune to the matching buckets. */
   private[operators] def ensurePostings(s: SparkSession, d: String): String = {
     val t = graft.sources.Warehouse.tableName("graft_postings", d)
-    graft.sources.Warehouse.ensure(s, t, "term", reuseFrom = Some(d)) {
+    graft.sources.Warehouse.ensure(s, t, "term", srcDir = d) {
       Tables.documents(s, d)
         .select(
           col("doc_id"),

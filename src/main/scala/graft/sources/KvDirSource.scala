@@ -1,11 +1,12 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, BufferedReader, FileOutputStream, InputStreamReader, OutputStream}
-import java.nio.charset.StandardCharsets
+import java.io.{BufferedOutputStream, FileOutputStream, OutputStream}
 import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.sql.{GraftBridge, SparkSession}
@@ -22,8 +23,10 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, IsNotN
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.json4s.{JInt, JLong, JObject, JString}
+import org.json4s.jackson.JsonMethods
 
-import graft.functions.NativeExprs
+import graft.functions.{LineKv, NativeExprs}
 
 /** DataSource V2 reader for the reference engine's NATIVE storage format:
   * flat directories of text files holding one `"<key> <value>"` record per
@@ -37,16 +40,21 @@ import graft.functions.NativeExprs
   * (`SupportsPushDownRequiredColumns` — a `select(value)` never
   * materializes keys; plan-guarded).
   *
-  * Parse parity with the engine path is spec-pinned ([[graft.sources]]
-  * KvDirSourceSpec): leading whitespace of every kind stripped, key =
-  * first `\s+`-token, value = rest (empty when absent),
-  * whitespace-only lines DROPPED (the reference's stream extraction
-  * fails and emits nothing).
+  * One line→KV rule: lines are split as Spark's text scan (the engine's
+  * input) splits them, by Hadoop's `LineReader` (`\n`, `\r` and `\r\n`
+  * end a line), and each line's raw bytes go through
+  * [[graft.functions.LineKv.kernel]], the kernel the engine's own
+  * expression calls: leading whitespace of every kind stripped, key =
+  * first `\s+`-token, value = rest (empty when absent), whitespace-only
+  * lines DROPPED (the reference's stream extraction fails and emits
+  * nothing). No charset decoder runs, so rows carry the file's bytes as
+  * they are: malformed UTF-8 reads, groups and copies exactly as on the
+  * engine path (KvDirSourceSpec pins both).
   *
   * Scale notes: file listing happens once at planning; each file is one
   * partition (matching the reference's file-per-split model — files there
   * are output shards, already sized by the writing job's parallelism).
-  * Readers stream lines through a buffered decoder — constant memory per
+  * Readers stream lines through one reused buffer — constant memory per
   * partition. FileSystem resolution uses the SESSION's Hadoop conf
   * everywhere: driver-side code (listing, commit, truncate) reads it
   * directly, and every reader/writer factory ships it to the executors
@@ -87,77 +95,29 @@ object KvDirSource {
     SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
   val Schema: StructType =
     StructType(Seq(StructField("key", StringType), StructField("value", StringType)))
-
-  /** The engine's line→KV rule (`graft.functions.LineKv` on the engine path),
-    * one definition for this reader and the parity spec: None = dropped
-    * (whitespace-only). One char scan over the `\s` class of
-    * [[NativeExprs.isWs]]: leading whitespace skipped, key = first token,
-    * value = the rest after the run that ends the key. */
-  def parse(line: String): Option[(String, String)] = {
-    val n = line.length
-    var i = 0
-    while (i < n && NativeExprs.isWs(line.charAt(i))) i += 1
-    if (i == n) None
-    else {
-      val start = i
-      while (i < n && !NativeExprs.isWs(line.charAt(i))) i += 1
-      val key = line.substring(start, i)
-      while (i < n && NativeExprs.isWs(line.charAt(i))) i += 1
-      Some((key, line.substring(i)))
-    }
-  }
-
-  /** `parse(line).isDefined`, allocation-free: a line is a record iff it
-    * contains any char outside `\s`. */
-  def isRecordLine(line: String): Boolean = {
-    var i = 0
-    while (i < line.length) {
-      if (!NativeExprs.isWs(line.charAt(i))) return true
-      i += 1
-    }
-    false
-  }
 }
 
-/** Shared line-record machinery for the row and count readers: one
-  * file-open recipe and ONE application of the parse + key-filter rule,
-  * so the two scan shapes cannot diverge on the same file. Runs on
-  * EXECUTORS: the Hadoop conf arrives serialized from the driver's
-  * session, never from a default `Configuration()`. */
+/** The one record stream of the row and count readers: the file's lines
+  * as raw bytes in one reused `Text`, each split by [[LineKv.kernel]], the
+  * pushed key filter compared byte for byte against its literal encoded
+  * once. A pushed COUNT(*) counts what `next` returns, so it cannot
+  * diverge from count-after-read. Runs on EXECUTORS: the Hadoop conf
+  * arrives serialized from the driver's session, never from a default
+  * `Configuration()`. */
 private[sources] final class KvRecords(
     file: String, keyEquals: Option[String], conf: Configuration) {
   private val path = new Path(file)
-  private val reader = new BufferedReader(
-    new InputStreamReader(
-      path.getFileSystem(conf).open(path), StandardCharsets.UTF_8))
+  private val reader = new LineReader(path.getFileSystem(conf).open(path), conf)
+  private val line = new Text()
+  private val key = keyEquals.map(UTF8String.fromString).orNull
 
-  /** Next filter-surviving (key, value) record, or null at EOF. */
-  def nextRecord(): (String, String) = {
-    var line = reader.readLine()
-    while (line != null) {
-      KvDirSource.parse(line) match {
-        case Some(kv) if keyEquals.forall(_ == kv._1) => return kv
-        case _ => line = reader.readLine()
-      }
+  /** Next filter-surviving (key, value) row, or null at EOF. */
+  def next(): InternalRow = {
+    while (reader.readLine(line) > 0) {
+      val kv = LineKv.kernel(UTF8String.fromBytes(line.getBytes, 0, line.getLength))
+      if (kv != null && (key == null || key == kv.getUTF8String(0))) return kv
     }
     null
-  }
-
-  /** Count of filter-surviving records in the rest of the stream. With no
-    * key filter this is a pure char scan per line (no regex, no split
-    * array) — the whole point of the pushed count. */
-  def countRecords(): Long = {
-    var n = 0L
-    if (keyEquals.isEmpty) {
-      var line = reader.readLine()
-      while (line != null) {
-        if (KvDirSource.isRecordLine(line)) n += 1
-        line = reader.readLine()
-      }
-    } else {
-      while (nextRecord() != null) n += 1
-    }
-    n
   }
 
   def close(): Unit = reader.close()
@@ -519,16 +479,15 @@ private[sources] class KvScanBuilder(path: String, maxFilesPerTrigger: Option[In
 
   /** Accept a bare global COUNT(*) — the "how many records" pass a text
     * format can answer without materializing a single row into Spark
-    * (the line scan still runs, but each FILE hands back one Long
-    * instead of one row per line — no UTF8String allocation, no per-row
-    * handoff). PARTIAL pushdown (`supportCompletePushDown` = false):
-    * each input partition emits its own count and Spark's final
-    * aggregate sums them — correct under any partitioning, no
-    * single-partition requirement. Composes with the pushed key filter
-    * (Spark only attempts aggregate pushdown once every remaining
-    * filter was claimed by the source, so a pushed count counts exactly
-    * the key-matching records). Grouped or non-count aggregates stay
-    * with Spark. */
+    * (the record stream still runs, but each FILE hands back one Long
+    * instead of one row per line — no per-row handoff). PARTIAL
+    * pushdown (`supportCompletePushDown` = false): each input partition
+    * emits its own count and Spark's final aggregate sums them — correct
+    * under any partitioning, no single-partition requirement. Composes
+    * with the pushed key filter (Spark only attempts aggregate pushdown
+    * once every remaining filter was claimed by the source, so a pushed
+    * count counts exactly the key-matching records). Grouped or
+    * non-count aggregates stay with Spark. */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     val ok = aggregation.groupByExpressions.isEmpty &&
       aggregation.aggregateExpressions.length == 1 &&
@@ -610,7 +569,9 @@ private[sources] class KvCountPartitionReader(
 
   override def next(): Boolean = {
     if (emitted) return false
-    current = new GenericInternalRow(Array[Any](records.countRecords()))
+    var n = 0L
+    while (records.next() != null) n += 1
+    current = new GenericInternalRow(Array[Any](n))
     emitted = true
     true
   }
@@ -639,18 +600,19 @@ private[sources] class KvScan(
   * the last ingested file name (full path — all files share the dir
   * prefix, so path order ≡ name order) plus the count of files at or
   * below it, which lets the next batch DETECT a producer that violated
-  * the naming contract (see [[KvMicroBatchStream]]). */
+  * the naming contract (see [[KvMicroBatchStream]]). Written and read by
+  * json4s as `{"last":…,"n":…}`: every control character in a path is
+  * escaped, so the offset stays one line of Spark's line-oriented offset
+  * log. */
 private[sources] case class KvOffset(lastFile: String, nBelow: Long) extends Offset {
   override def json(): String =
-    "{\"last\":\"" + lastFile.replace("\\", "\\\\").replace("\"", "\\\"") +
-      "\",\"n\":" + nBelow + "}"
+    JsonMethods.compact(JObject("last" -> JString(lastFile), "n" -> JLong(nBelow)))
 }
 
 private[sources] object KvOffset {
-  private val Shape = """\{"last":"(.*)","n":(-?\d+)\}""".r
-  def fromJson(j: String): KvOffset = j match {
-    case Shape(v, n) => KvOffset(v.replaceAll("""\\(.)""", "$1"), n.toLong)
-    case other => throw new IllegalArgumentException(s"bad graft-kv offset: $other")
+  def fromJson(j: String): KvOffset = JsonMethods.parse(j) match {
+    case JObject(List(("last", JString(last)), ("n", JInt(n)))) => KvOffset(last, n.toLong)
+    case _ => throw new IllegalArgumentException(s"bad graft-kv offset: $j")
   }
 }
 
@@ -794,18 +756,13 @@ private[sources] class KvPartitionReader(
     conf: Broadcast[SerializableConfiguration])
     extends PartitionReader[InternalRow] {
   private val records = new KvRecords(file, keyEquals, conf.value.value)
+  private val columns = fields.map(KvDirSource.Schema.fieldIndex)
   private var current: InternalRow = _
 
   override def next(): Boolean = {
-    val kv = records.nextRecord()
-    if (kv == null) false
-    else {
-      current = new GenericInternalRow(fields.map {
-        case "key" => UTF8String.fromString(kv._1)
-        case "value" => UTF8String.fromString(kv._2)
-      }.toArray[Any])
-      true
-    }
+    val kv = records.next()
+    if (kv != null) current = new GenericInternalRow(columns.map(kv.getUTF8String(_): Any))
+    kv != null
   }
 
   override def get(): InternalRow = current

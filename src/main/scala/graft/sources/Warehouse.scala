@@ -8,22 +8,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * recomputes the corpus-side derivation.
   *
   * The local harness uses the default in-memory catalog, so table METADATA
-  * lives per-JVM while files persist in the warehouse dir. Callers that
-  * pass `reuseFrom = Some(srcDir)` opt into CROSS-JVM artifact reuse: a
-  * successful build drops a `_graft_meta` marker (schema + layout + a
-  * fingerprint of the source data files AND the compiled library classes)
+  * lives per-JVM while files persist in the warehouse dir. Every artifact
+  * names the source dir it derives from (`srcDir`) and is reused ACROSS
+  * JVMs: a successful build drops a `_graft_meta` marker (schema + layout
+  * + a fingerprint of the source data files AND the compiled library
+  * classes)
   * next to the table files, and a later JVM finding a marker whose
   * fingerprint still matches RE-REGISTERS the existing files as an
   * external table instead of re-running the fit — the "paid once per
   * warehouse" story made true across processes. Either new data (the
   * driver regenerates testdata; MakeScale rewrites replica dirs) or new
   * code (any recompile) changes the fingerprint and forces a rebuild, so
-  * a stale index can never serve a query silently. Only immutable
-  * post-build artifacts may opt in — a table the pipeline later mutates
-  * (e.g. a spec's forget-target) must keep the default rebuild path.
-  * A real deployment points the same code at a persistent metastore and
-  * runs the build step on its own schedule; this marker is the
-  * in-memory-catalog stand-in for that metastore.
+  * a stale index can never serve a query silently. So an artifact must
+  * be a pure function of its source dir and the code: a table the
+  * pipeline later mutates (e.g. a spec's forget-target) is not built
+  * here. A real deployment points the same code at a persistent
+  * metastore and runs the build step on its own schedule; this marker is
+  * the in-memory-catalog stand-in for that metastore.
   *
   * Concurrency: two JVMs ensuring the same MISSING table are serialized
   * by a per-table build lock (an OS file lock on `<name>._graft_lock` in
@@ -271,10 +272,10 @@ object Warehouse {
   private val heldLocks = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Shared miss-path for every ensure variant: existence check, then —
-    * when the caller opted into reuse and a fingerprint-matching marker
-    * is present — re-registration of the previous JVM's files; otherwise
-    * stale leftover-directory cleanup and the caller's write (which must
-    * end in `saveAsTable(name)`), both under a cross-JVM build lock.
+    * when a fingerprint-matching marker is present — re-registration of
+    * the previous JVM's files; otherwise stale leftover-directory cleanup
+    * and the caller's write (which must end in `saveAsTable(name)`), both
+    * under a cross-JVM build lock.
     *
     * The lock closes the two-writer race the r12 marker protocol left
     * open: without it, JVM B's clearLeftover could delete JVM A's
@@ -290,25 +291,22 @@ object Warehouse {
     * serializing unrelated tables.
     *
     * Staleness of a REGISTERED table (r14): when the table already
-    * exists in this JVM's catalog AND the caller opted into reuse, the
-    * stored marker fingerprint is revalidated against a fresh source
-    * fingerprint — a long-lived JVM whose source dir is rewritten under
-    * it drops the catalog entry and rebuilds instead of serving a stale
-    * artifact (previously the exists fast-path defeated srcFingerprint's
-    * per-ensure recomputation). Tables built WITHOUT reuseFrom keep the
-    * plain exists fast-path: they are in-JVM, possibly mutable (forget
-    * targets), and carry no marker contract. */
-  def ensureVia(s: SparkSession, name: String, reuseFrom: Option[String] = None)(
+    * exists in this JVM's catalog, the stored marker fingerprint is
+    * revalidated against a fresh source fingerprint — a long-lived JVM
+    * whose source dir is rewritten under it drops the catalog entry and
+    * rebuilds instead of serving a stale artifact (previously the exists
+    * fast-path defeated srcFingerprint's per-ensure recomputation). */
+  def ensureVia(s: SparkSession, name: String, srcDir: String)(
       write: => Unit): Unit = {
-    // flatMap: an unknown code provenance (no graft-bearing classpath
-    // entry) yields None — no marker is accepted or written (see
+    // an unknown code provenance (no graft-bearing classpath entry)
+    // yields None — no marker is accepted or written (see
     // codeFingerprintOf), never a constant fingerprint
-    lazy val fp = reuseFrom.flatMap(srcFingerprint)
-    // registered AND (under a reuse contract) still deriving from the
-    // current source — the fast path. Read-only: the mismatch DROP runs
-    // only under the file lock (a pre-lock drop of a managed table
-    // deletes its directory, which a foreign lock holder may be
-    // mid-writing).
+    lazy val fp = srcFingerprint(srcDir)
+    // registered AND (when the code's provenance is known) still
+    // deriving from the current source — the fast path. Read-only: the
+    // mismatch DROP runs only under the file lock (a pre-lock drop of a
+    // managed table deletes its directory, which a foreign lock holder
+    // may be mid-writing).
     def existsFresh(): Boolean = s.catalog.tableExists(name) &&
       (fp.isEmpty || !markerFpMismatch(s, name, fp.get))
     def adopt(): Boolean = !s.catalog.tableExists(name) &&
@@ -413,11 +411,12 @@ object Warehouse {
     readMarkerProps(tableDir(s, name)).exists(_.getProperty("fp") != fresh)
 
   /** Create `name` as a bucketed managed table if this JVM's catalog does
-    * not have it yet; `build` runs only on a miss. */
+    * not have it yet and no reusable build of it from `srcDir` exists;
+    * `build` runs only on a miss. */
   def ensure(
       s: SparkSession, name: String, bucketCol: String, nBuckets: Int = 8,
-      reuseFrom: Option[String] = None)(
-      build: => DataFrame): Unit = ensureVia(s, name, reuseFrom) {
+      srcDir: String)(
+      build: => DataFrame): Unit = ensureVia(s, name, srcDir) {
     build.write.bucketBy(nBuckets, bucketCol).sortBy(bucketCol).saveAsTable(name)
   }
 
@@ -427,9 +426,8 @@ object Warehouse {
     * plan time as a PartitionFilter — unlike bucket pruning, which Spark
     * silently disables when no operator exploits the bucketing. */
   def ensurePartitioned(
-      s: SparkSession, name: String, partitionCol: String,
-      reuseFrom: Option[String] = None)(
-      build: => DataFrame): Unit = ensureVia(s, name, reuseFrom) {
+      s: SparkSession, name: String, partitionCol: String, srcDir: String)(
+      build: => DataFrame): Unit = ensureVia(s, name, srcDir) {
     build.write.partitionBy(partitionCol).saveAsTable(name)
   }
 
@@ -441,7 +439,7 @@ object Warehouse {
       s: SparkSession, prefix: String, dir: String, bucketCol: String,
       nBuckets: Int = 8)(build: => DataFrame): DataFrame = {
     val t = tableName(prefix, dir)
-    ensure(s, t, bucketCol, nBuckets, reuseFrom = Some(dir))(build)
+    ensure(s, t, bucketCol, nBuckets, srcDir = dir)(build)
     s.table(t)
   }
 }

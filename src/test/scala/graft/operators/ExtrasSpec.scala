@@ -1658,7 +1658,7 @@ class ExtrasSpec extends SparkSpec {
     val cells = vecs.map { case (id, v) => id -> cellOf(v) }.toMap
     // min-rooted union-find: component root = min id, so survivors are
     // exactly the fixpoints of find
-    val parent = scala.collection.mutable.Map(vecs.map(v => v._1 -> v._1): _*)
+    val parent = vecs.map(v => v._1 -> v._1).to(scala.collection.mutable.Map)
     def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); parent(x) = r; r }
     for {
       i <- vecs.indices; j <- (i + 1) until n
@@ -2146,7 +2146,7 @@ class ExtrasSpec extends SparkSpec {
       best
     }
     val cells = vecs.map { case (id, v) => id -> cellOf(v) }.toMap
-    val parent = scala.collection.mutable.Map(vecs.map(v => v._1 -> v._1): _*)
+    val parent = vecs.map(v => v._1 -> v._1).to(scala.collection.mutable.Map)
     def find(x: Long): Long = {
       var r = x; while (parent(r) != r) r = parent(r); parent(x) = r; r
     }

@@ -127,7 +127,7 @@ class IterateSpec extends SparkSpec {
     // remain persisted — the unpersist is async (blocking=false), so allow
     // the tail to drain before asserting
     val deadline = System.currentTimeMillis() + 10000
-    def live() = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    def live() = spark.sparkContext.getPersistentRDDs.keySet.diff(before).size
     while (live() > 1 && System.currentTimeMillis() < deadline) Thread.sleep(100)
     assert(live() === 1, s"expected only the final state's blocks to stay persisted, got ${live()}")
     // and the survivor is the final state, still fully readable

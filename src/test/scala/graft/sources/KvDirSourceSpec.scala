@@ -8,11 +8,12 @@ import graft.engine.{BatchSpec, Engine}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
-/** The custom DSv2 KV reader against the engine's own parsing rule: the
-  * two implementations of the `"<key> <value>"` contract (Engine.plan's
-  * Catalyst split and KvPartitionReader's JVM split) must agree line for
-  * line — including the whitespace edge cases the reference's `iss >> key`
-  * convention dictates. */
+/** The custom DSv2 KV reader against the engine's own path: both read a
+  * line's raw bytes and split it with the one `LineKv` kernel, so the
+  * reader and Engine.plan must give the same rows, byte for byte — the
+  * whitespace edge cases the reference's `iss >> key` convention
+  * dictates, `\r` line ends and malformed UTF-8 included — and a pushed
+  * COUNT(*) must count exactly the rows the reader returns. */
 class KvDirSourceSpec extends SparkSpec {
 
   private def writeFixture(): String = {
@@ -291,30 +292,94 @@ class KvDirSourceSpec extends SparkSpec {
     assert(back() === Seq(("x", "1")), "failed write must leave no partial shards")
   }
 
-  test("isRecordLine equals parse.isDefined for arbitrary whitespace-laced lines") {
-    // the allocation-free count path and the parse rule must agree on
-    // every line, or a pushed COUNT(*) diverges from count-after-read;
-    // fuzz over the exact \s class plus printable payload chars
+  test("a pushed COUNT(*) equals the rows read, with and without the key filter, on fuzzed lines") {
+    // one record stream serves both scan shapes; fuzz the files with the
+    // exact \s class (line ends included) plus printable payload chars,
+    // and check the rows against a plain-Scala model of the rule too
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val ch = Gen.frequency(
-      5 -> Gen.oneOf(' ', '\t', '\u000B', '\f', '\r'),
-      4 -> Gen.alphaNumChar,
+      5 -> Gen.oneOf(' ', '\t', '\u000B', '\f', '\r', '\n'),
+      4 -> Gen.oneOf('a', 'b', 'c', '1'),
       1 -> Gen.oneOf('!', '"', '\\', '~', 'é'))
-    val lineGen = Gen.listOf(ch).map(_.mkString)
-    (1 to 300).foreach { seed =>
-      val line = lineGen.pureApply(Gen.Parameters.default.withSize(20), Seed(seed.toLong))
-      assert(KvDirSource.isRecordLine(line) === KvDirSource.parse(line).isDefined,
-        s"count/parse disagree on ${line.map(c => f"\\u${c.toInt}%04x").mkString}")
+    val textGen = Gen.listOf(ch).map(_.mkString)
+    val dir = Files.createTempDirectory("graft-kv-count-")
+    val texts = (1 to 30).map { seed =>
+      val text = textGen.pureApply(Gen.Parameters.default.withSize(60), Seed(seed.toLong))
+      Files.write(dir.resolve(f"part-$seed%03d"), text.getBytes(StandardCharsets.UTF_8))
+      text
     }
-    // offset JSON round-trip under hostile path characters
-    val pathGen = Gen.listOf(Gen.oneOf(Gen.alphaNumChar, Gen.oneOf('"', '\\', '/', '-')))
-      .map(_.mkString)
+    def ref(line: String): Option[(String, String)] = {
+      val t = line.replaceFirst("^\\s+", "")
+      if (t.isEmpty) None
+      else { val p = t.split("\\s+", 2); Some(p(0) -> (if (p.length > 1) p(1) else "")) }
+    }
+    val want = texts.flatMap(_.split("\r\n|\r|\n")).flatMap(ref).sorted
+    val kv = spark.read.format("graft-kv").load(dir.toString)
+    val rows = kv.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(rows === want)
+    def pushedCount(df: org.apache.spark.sql.DataFrame): Long = {
+      val counted = df.groupBy().count()
+      val scans = counted.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+      assert(scans.map(_.scan.description()).exists(_.contains("PushedAggregation: [COUNT(*)]")),
+        s"count not pushed:\n${counted.queryExecution.sparkPlan}")
+      counted.collect().head.getLong(0)
+    }
+    assert(pushedCount(kv) === rows.size.toLong)
+    // the most frequent keys, and every key with a multi-byte char
+    val byCount = rows.groupBy(_._1).toSeq.sortBy { case (k, rs) => (-rs.size, k) }.map(_._1)
+    val keys = (byCount.take(8) ++ byCount.filter(_.exists(_ > '~'))).distinct
+    assert(keys.size > 3 && keys.exists(_.exists(_ > '~')), s"too few keys to filter on: $keys")
+    keys.foreach { k =>
+      assert(pushedCount(kv.filter(col("key") === k)) === rows.count(_._1 == k).toLong,
+        s"pushed filtered count diverges on key $k")
+    }
+  }
+
+  test("graft-kv offsets are one line of JSON for any path and read the earlier format") {
+    // Spark's offset log is line-oriented: a raw control character in a
+    // path must be escaped, never written through
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val pathGen = Gen.listOf(Gen.oneOf(
+      Gen.alphaNumChar, Gen.oneOf('"', '\\', '/', '-', '\n', '\t', '\u0001'))).map(_.mkString)
     (1 to 100).foreach { seed =>
       val p = pathGen.pureApply(Gen.Parameters.default.withSize(16), Seed(seed + 1000L))
       val off = KvOffset(p, seed.toLong)
+      assert(!off.json().exists(_ < ' '), s"raw control character in ${off.json()}")
       assert(KvOffset.fromJson(off.json()) === off, s"offset round-trip broke on: $p")
     }
+    assert(KvOffset.fromJson("""{"last":"file:/tmp/we\"ird\\name/part-007","n":7}""") ===
+      KvOffset("""file:/tmp/we"ird\name/part-007""", 7L))
+    assert(KvOffset("file:/d/part-1", 3L).json() === """{"last":"file:/d/part-1","n":3}""")
+  }
+
+  test("graft-kv passes malformed UTF-8 through byte for byte, as the engine path does") {
+    import org.apache.spark.sql.DataFrame
+    // k\xFF and k\xFE are distinct keys to the engine; a charset decoder
+    // would turn both into k U+FFFD. \xC3 opens a 2-byte sequence the
+    // space truncates
+    val input = Array(0x6b, 0xff, 0x20, 0x31, 0x0a, 0x6b, 0xfe, 0x20, 0x32, 0x0a, 0xc3, 0x20, 0x33, 0x0a)
+      .map(_.toByte)
+    val dir = Files.createTempDirectory("graft-kv-bytes-")
+    Files.write(dir.resolve("part-000"), input)
+    def hex(b: Array[Byte]) = b.map(x => f"${x & 0xff}%02x").mkString
+    def bytes(df: DataFrame): Seq[(String, String)] =
+      df.select(col("key").cast("binary"), col("value").cast("binary")).collect()
+        .map(r => (hex(r.getAs[Array[Byte]](0)), hex(r.getAs[Array[Byte]](1)))).sorted.toSeq
+    val read = spark.read.format("graft-kv").load(dir.toString)
+    val engine = Engine.plan(
+      spark, BatchSpec(Nil, Nil, dir.toString, "/unused", splitCount = -1, rNum = 0))
+    assert(bytes(read) === bytes(engine))
+    assert(bytes(read) === Seq(("6bfe", "32"), ("6bff", "31"), ("c3", "33")))
+    assert(read.filter(col("key").startsWith("k")).select("key").distinct().count() === 2L)
+    // a graft-kv -> graft-kv copy writes the input's bytes back
+    val out = Files.createTempDirectory("graft-kv-bytes-out-").resolve("copy").toString
+    read.write.format("graft-kv").mode("append").save(out)
+    val shards = new java.io.File(out).listFiles()
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    assert(shards.length === 1)
+    assert(hex(Files.readAllBytes(shards.head.toPath)) === hex(input))
   }
 
   test("KV->KV streaming loop is exactly-once across a mid-stream kill and resume") {
