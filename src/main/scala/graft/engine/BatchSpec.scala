@@ -5,8 +5,9 @@ import org.json4s.jackson.JsonMethods
 
 /** The job description — field-for-field parity with the reference's `Batch`
   * proto (src/main/proto/common/common.proto:14-23), submitted as JSON
-  * (ClientMain.java:44-52). Binary ids become named built-in ops from
-  * [[Ops]]; everything else keeps the reference's names and semantics:
+  * (ClientMain.java:44-52). Binary ids become names of ops in [[Ops]],
+  * built-in or registered (a registered op may run a binary); everything
+  * else keeps the reference's names and semantics:
   *
   *   - `map_ops`    ≡ repeated map_bin_ids (applied in order)
   *   - `reduce_ops` ≡ repeated reduce_bin_ids (applied in order)
@@ -45,13 +46,13 @@ object BatchSpec {
       case JString(s) => s
       case other      => throw new IllegalArgumentException(s"$field: expected string, got $other")
     }
+    // an out-of-range or fractional number is rejected, never wrapped or
+    // truncated; `2.0` is an int, as in protobuf's JSON mapping
     def int(field: String, default: Int): Int = j \ field match {
-      case JInt(i)     => i.toInt
-      case JLong(i)    => i.toInt
-      case JDouble(d)  => d.toInt
-      case JDecimal(d) => d.toInt
-      case JNothing    => default
-      case other       => throw new IllegalArgumentException(s"$field: expected int, got $other")
+      case JInt(i) if i.isValidInt    => i.toInt
+      case JDouble(d) if d.isValidInt => d.toInt
+      case JNothing                   => default
+      case other => throw new IllegalArgumentException(s"$field: expected int, got $other")
     }
     BatchSpec(
       mapOps = strs("map_ops"),

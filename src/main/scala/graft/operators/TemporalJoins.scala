@@ -70,7 +70,7 @@ object TemporalJoins {
         struct(rightCols.map(col): _*).as("__payload"))
     val unioned = l.select(
       col(key), col("__t"), col("__side"), col("__tb"), col("__payload"),
-      struct(left.columns.map(col): _*).as("__left")) // keep left row intact
+      struct(left.columns.toSeq.map(col): _*).as("__left")) // keep left row intact
       .unionByName(
         r.withColumn("__left", lit(null).cast(structType(left, left.columns.toSeq))))
     // Right rows sort before left rows at equal time (inclusive t' ≤ t);
@@ -82,7 +82,7 @@ object TemporalJoins {
     val carried = unioned
       .withColumn("__match", last(col("__payload"), ignoreNulls = true).over(w))
       .filter(col("__side") === 1)
-    val leftOut = left.columns.map(c => col(s"__left.$c").as(c))
+    val leftOut = left.columns.toSeq.map(c => col(s"__left.$c").as(c))
     val rightOut = rightCols.map(c => col(s"__match.$c").as(c))
     carried.select(leftOut ++ rightOut: _*)
   }
@@ -136,7 +136,7 @@ object TemporalJoins {
         struct(payloadCols.map(col): _*).as("__payload"))
     val unioned = l.select(
       col(key), col("__t"), col("__side"), col("__tb"), col("__payload"),
-      struct(left.columns.map(col): _*).as("__left"))
+      struct(left.columns.toSeq.map(col): _*).as("__left"))
       .unionByName(
         r.withColumn("__left", lit(null).cast(structType(left, left.columns.toSeq))))
     val w = Window
@@ -157,7 +157,7 @@ object TemporalJoins {
             col("__match")))
       case None => carried
     }
-    val leftOut = left.columns.map(c => col(s"__left.$c").as(c))
+    val leftOut = left.columns.toSeq.map(c => col(s"__left.$c").as(c))
     val rightOut = rightCols.map(c => col(s"__match.$c").as(c))
     gated.select(leftOut ++ rightOut: _*)
   }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * standard shim every Spark-extension library ships: one file inside the
   * org.apache.spark.sql package, nothing else reaches into internals.
   * It also reaches the `private[spark]` task output metrics a DSv2 writer
-  * needs ([[reportOutput]]) and the context's block removal ([[dropBlocks]]).
+  * needs ([[reportOutput]]), the context's block removal ([[dropBlocks]])
+  * and the script-transform plan node ([[scriptTransform]]).
   */
 object GraftBridge {
   /** Re-export of the `private[sql]` AbstractDataType so graft expressions
@@ -53,4 +54,23 @@ object GraftBridge {
     * may be dropped. */
   def dropBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** `lines` (one string column) piped through the shell string `command`,
+    * one `/bin/bash -c` child per partition: the `ScriptTransformation`
+    * node behind `SELECT TRANSFORM … USING`, planned without Hive as
+    * `SparkScriptTransformationExec`. Each row is one stdin line; each
+    * stdout line is one row of the one string column `name`, the whole
+    * line. A non-zero exit fails the task. The output's null marker is a
+    * line terminator, which no line holds, so a `\N` line stays a line
+    * (the default marker would read it as NULL). */
+  def scriptTransform(lines: DataFrame, command: String, name: String): DataFrame = {
+    val ds = lines.asInstanceOf[classic.Dataset[Row]]
+    val out = catalyst.expressions.AttributeReference(name, types.StringType)()
+    val io = catalyst.plans.logical.ScriptInputOutputSchema(
+      Nil, Seq("TOK_TABLEROWFORMATNULL" -> "\n"), None, None, Nil, Nil, None, None,
+      schemaLess = false)
+    classic.Dataset.ofRows(
+      ds.sparkSession,
+      catalyst.plans.logical.ScriptTransformation(command, Seq(out), ds.logicalPlan, io))
+  }
 }

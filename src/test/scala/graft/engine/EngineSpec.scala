@@ -195,6 +195,21 @@ class EngineSpec extends SparkSpec {
     assert(readOutput(out) === Map("k1" -> "a,b", "k2" -> "z"))
   }
 
+  test("a pipe op through cat keeps every line as identity does: tabs, blanks, a \\N line") {
+    // `\N` is the script transform's default NULL marker: a binary's
+    // output line that reads `\N` must stay a line
+    val in = writeCorpus(Seq("a\tb\tc d", "", "  \t", "x  y\t", "\tlead tab", "\\N", "k \\N"))
+    Ops.registerMap(PipeMapOp("cat", "cat"))
+    Ops.registerReduce(PipeReduce("cat", "cat"))
+    def rows(maps: List[String], reduces: List[String]) =
+      Engine.plan(spark, BatchSpec(maps, reduces, in.toString, "/unused", -1, 2)).collect()
+        .map(r => r.getString(0) -> r.getString(1)).sorted.toSeq
+    val identity = rows(List("identity"), Nil)
+    assert(identity.contains("\\N" -> "") && identity.contains("a" -> "b\tc d"), identity)
+    assert(rows(List("cat"), Nil) === identity)
+    assert(rows(List("identity"), List("cat")) === identity)
+  }
+
   test("map chain composes in order (lowercase then tokenize)") {
     val in = writeCorpus(Seq("A b", "B"))
     val out = Files.createTempDirectory("graft-out-").resolve("dest")
@@ -387,11 +402,21 @@ class EngineSpec extends SparkSpec {
     assert(spec === BatchSpec(List("tokenize"), List("sum_ints"), "/in", "/out", 10, 2))
   }
 
-  test("BatchSpec rejects non-string op entries instead of silently dropping them") {
+  test("BatchSpec rejects malformed fields instead of dropping or coercing them") {
     val bad =
       """{"map_ops":["tokenize",5],"reduce_ops":[],
         |"input_id":"/in","final_dest_dir_id":"/out"}""".stripMargin
     val e = intercept[IllegalArgumentException](BatchSpec.fromJson(bad))
     assert(e.getMessage.contains("map_ops"))
+    def withRNum(n: String) =
+      s"""{"map_ops":[],"input_id":"/in","final_dest_dir_id":"/out","r_num":$n}"""
+    // no number may turn into a different int (2^32 + 2 wrapping to 2,
+    // 2.5 truncating to 2)
+    for (n <- Seq("4294967298", "2.5", "-2147483649", "\"2\"", "true")) {
+      val e = intercept[IllegalArgumentException](BatchSpec.fromJson(withRNum(n)))
+      assert(e.getMessage.startsWith("r_num:"), s"r_num $n: ${e.getMessage}")
+    }
+    // protobuf's JSON mapping accepts an integral number written as a float
+    assert(BatchSpec.fromJson(withRNum("2.0")).rNum === 2)
   }
 }

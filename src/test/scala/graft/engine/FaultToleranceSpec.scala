@@ -92,4 +92,38 @@ class FaultToleranceSpec extends SparkSpec {
       .toMap
     assert(counts === Map("a" -> "16", "b" -> "8", "c" -> "8"))
   }
+
+  test("a reduce binary that dies on its first run commits exactly once on retry") {
+    // The reference's own failure shape: a user binary exits non-zero and
+    // the task is re-run. The first run of ALL the job's tasks takes the
+    // marker (mkdir is atomic) and exits 1 before reading its input;
+    // every later run is the plain awk sum.
+    val dir = Files.createTempDirectory("graft-ft-pipe-")
+    val in = Files.createDirectory(dir.resolve("in"))
+    (0 until 8).foreach(i => Files.writeString(in.resolve(i.toString), "a b c a\n"))
+    val out = dir.resolve("dest")
+    val mark = dir.resolve("failed-once")
+    val script = dir.resolve("reducebin.sh")
+    Files.writeString(
+      script,
+      """mkdir "$MARK" 2>/dev/null && exit 1
+        |awk '{c[$1]+=$2} END {for(k in c) print k, c[k]}'
+        |""".stripMargin)
+    Ops.registerReduce(PipeReduce("flaky-sum-bin", s"MARK='$mark' sh '$script'"))
+    val rNum = 2
+    Engine.run(
+      spark,
+      BatchSpec(List("tokenize"), List("flaky-sum-bin"), in.toString, out.toString,
+        splitCount = -1, rNum = rNum))
+
+    assert(Files.isDirectory(mark), "failure was never injected — test proves nothing")
+    val names = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq
+    val shards = names.filter(_.startsWith("part-"))
+    assert(shards.nonEmpty && shards.size <= rNum, names)
+    assert(!names.contains("_temp"), names)
+    val kvs = shards.flatMap(f => Files.readAllLines(out.resolve(f)).asScala)
+      .filter(_.nonEmpty)
+      .map { l => val Array(k, v) = l.split(" ", 2); k -> v }
+    assert(kvs.sorted === Seq("a" -> "16", "b" -> "8", "c" -> "8"))
+  }
 }
